@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,11 +17,14 @@ import org.apache.spark.sql.graft.VectorExpressions
   * Phase 2 (re-rank): exact Euclidean distance on the k1 candidates, keep
   * top-k2. Self-matches are EXCLUDED (documented contract choice, SURVEY A7).
   *
-  * Spark shape: explode both sides to (table, hash) posting lists → equi-join
-  * → count → window top-k1 → join back for vectors → distance → window
-  * top-k2. This is the collision-counting LSH similarity join (PAPERS.md
-  * C2Net) expressed with stock relational operators so Catalyst handles
-  * pushdown and join selection.
+  * Each phase has one implementation: [[candidates]] (equi-join of posting
+  * lists with the broadcast query probes → count → window top-k1) and
+  * [[rerank]] (join back for vectors → distance → window top-k2). Every LSH
+  * entry point feeds those two stages, and the quantized-ANN families in
+  * [[Pq]] reuse [[rerank]] behind their own phase 1. This is the
+  * collision-counting LSH similarity join (PAPERS.md C2Net) expressed with
+  * stock relational operators so Catalyst handles pushdown and join
+  * selection.
   *
   * Scale notes (100 TB): the candidate join is an equi-join on (tbl, hash) —
   * shuffle-partitionable, no cross product anywhere. The query side is tiny
@@ -41,6 +44,11 @@ object Knn {
     * measured by tools/RecallSweep. Random vectors are a worst case for
     * LSH — real embedding corpora cluster and recall rises sharply. An
     * explicit `bits > 0` overrides; tables trades index size for recall.
+    *
+    * The postings and query probes are built here, in memory, with
+    * [[Lsh.explodeHashes]] / [[Lsh.multiprobe]] rather than read from an
+    * [[Index]] layout, so this path stays an independent reference for the
+    * indexed search (LshSpec asserts the two agree row for row).
     */
   def lshTopK(
       spark: SparkSession,
@@ -59,8 +67,15 @@ object Knn {
     val model = Lsh.fit(emb, tables, useBits)
     val hashed = Lsh.withHashes(spark, emb, model)
     val queries = hashed.filter(col("vec_id") < queryMaxId)
-    lshSearch(spark, hashed, queries, k1, k2,
-      probeBits = if (multiprobe) useBits else 0)
+      .select(col("vec_id").as("query_id"), col("hashes"), col("embedding").as("qv"))
+    // Multiprobe: also probe Hamming-1 buckets on the QUERY side only — the
+    // index stays untouched, so the cost is |Q|·tables·bits extra probe keys.
+    val exact = Lsh.explodeHashes(queries, "query_id")
+    val probes = if (multiprobe) Lsh.multiprobe(exact, useBits) else exact
+    val k1set = candidates(Lsh.explodeHashes(hashed), probes,
+      col("vec_id") =!= col("query_id"), None, k1)
+    rerank(k1set, hashed, queries.select(col("query_id"), col("qv")), k2,
+      collapseDuplicates = false)
   }
 
   /** The real search lifecycle (SURVEY §3.3, A3→A7): search a PERSISTED
@@ -74,7 +89,8 @@ object Knn {
     *   2. probes `postings/` with a static partition filter on the probe
     *      pkeys — a lossless prune (pkey is a function of the join key), so
     *      the collision scan reads |probe| directories, not the corpus;
-    *   3. collision-counts + re-ranks exactly as [[lshSearch]].
+    *   3. collision-counts + re-ranks through the shared [[candidates]] and
+    *      [[rerank]] stages.
     *
     * Results are identical to [[lshTopK]] (same deterministic fit, same
     * search semantics) — asserted by LshSpec.
@@ -132,30 +148,6 @@ object Knn {
       bucketCap = autoCap, candidateFilter = Some(meta.select(col("vec_id"))))
   }
 
-  /** Has this layout ever been batch-appended to? `appends/` batch markers
-    * exist from the first [[Lifecycle.allocateBatch]] on — a fresh build or
-    * an exactly-once streamed bootstrap has none, and therefore cannot hold
-    * duplicate copies of any (tbl, hash, vec_id) row. One driver fs stat.
-    */
-  private def everAppended(spark: SparkSession, indexDir: String): Boolean =
-    Lifecycle.fsOf(spark, indexDir)
-      .exists(new org.apache.hadoop.fs.Path(s"$indexDir/appends"))
-
-  /** The (query_id, tbl, hash) probe set for one query's packed hashes —
-    * shared by the stored-id path (precomputed hashes) and the raw-vector
-    * path (driver-hashed). Multiprobe expands Hamming-1 flips query-side.
-    */
-  private def probesOf(
-      qid: Long,
-      hashes: Seq[Long],
-      model: Lsh.LshModel,
-      multiprobe: Boolean): Seq[(Long, Int, Long)] =
-    hashes.zipWithIndex.flatMap { case (h, t) =>
-      val exact = Seq((qid, t, h))
-      if (multiprobe) exact ++ (0 until model.bits).map(b => (qid, t, h ^ (1L << b)))
-      else exact
-    }
-
   /** Raw-vector search against the persisted index (ES `knn.query_vector`):
     * the same A5→A6 pipeline as [[searchIndex]] for a query vector that is
     * NOT a stored document — the vector is hashed driver-side with the
@@ -163,7 +155,9 @@ object Knn {
     * path's arithmetic exactly), so probes hit the identical buckets a
     * stored twin's precomputed hashes would. `excludeIds` is the ES
     * exclude-filter knob (drop known ids — e.g. the query's own document —
-    * before the k1 cut so every slot is servable).
+    * before the k1 cut so every slot is servable). A vector whose length is
+    * not the index's `dim` is refused: it would hash and re-rank on the
+    * wrong components.
     *
     * Parity contract (spec-pinned): for a vector that IS stored, searching
     * by value with its id excluded returns exactly [[searchIndex]]'s
@@ -179,56 +173,17 @@ object Knn {
       multiprobe: Boolean = false,
       bucketCap: Int = 0,
       excludeIds: Seq[Long] = Nil): DataFrame = {
-    import spark.implicits._
-    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
-    val probeKeys = probesOf(-1L, model.hashVector(query).toSeq, model, multiprobe).distinct
-    val pkeys = probeKeys.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
-    // Same conditional duplicate-collapse as [[searchIndex]]: only a layout
-    // with append generations can hold duplicate posting copies.
-    val appended = everAppended(spark, indexDir)
-    val scanned = Index.livePostings(spark, indexDir)
-      .filter(col(Index.PKeyCol).isin(pkeys: _*))
-    val pruned =
-      if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
-    val postings = if (bucketCap > 0) Skew.capBuckets(pruned, bucketCap) else pruned
-    val qposts = probeKeys.toDF("query_id", "tbl", "hash")
-    val collisions = postings
-      .join(broadcast(qposts), Seq("tbl", "hash"))
-      .filter(if (excludeIds.isEmpty) lit(true) else !col("vec_id").isin(excludeIds: _*))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(count(lit(1)).as("collisions"))
-    val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("collisions").desc, col("vec_id").asc)
-    val k1set = collisions
-      .withColumn("r1", row_number().over(wK1))
-      .filter(col("r1") <= k1)
-      .drop("r1")
-    val qvecs = Seq((-1L, query.toSeq)).toDF("query_id", "qv")
-    // broadcast the CANDIDATE side: k1set is |Q|·k1 rows of 16 B by contract
-    // (the bounded probe set), the vectors side is the CORPUS — static
-    // sizeInBytes would happily broadcast the fixture-tiny vectors scan,
-    // which inverts at scale (shipping the corpus to the candidates).
-    val rescoredRaw = broadcast(k1set)
-      .join(Index.liveVectors(spark, indexDir).select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(qvecs), "query_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
-    val rescored =
-      if (appended) rescoredRaw.dropDuplicates("query_id", "neighbor_id")
-      else rescoredRaw
-    val wK2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    rescored
-      .withColumn("rank", row_number().over(wK2))
-      .filter(col("rank") <= k2)
-      .select(
-        col("query_id"), col("neighbor_id"), col("rank"),
-        col("collisions"), Det.display(col("dist"), 4).as("dist4"))
-      .orderBy(col("query_id"), col("rank"))
+    val keep = if (excludeIds.isEmpty) lit(true) else !col("vec_id").isin(excludeIds: _*)
+    searchLayout(spark, indexDir, k1, k2, multiprobe, bucketCap, keep, None) { model =>
+      require(query.length == model.dim,
+        s"query vector has ${query.length} components but the index at $indexDir " +
+          s"has dim ${model.dim}; embed the query with the model the index was built from")
+      Seq((-1L, model.hashVector(query).toSeq, query.toSeq))
+    }
   }
 
-  /** A5–A7 against a persisted [[Index]] layout.
+  /** A5–A7 against a persisted [[Index]] layout, one query per stored id
+    * below `queryMaxId`, each excluding itself.
     *
     * `bucketCap` (0 = off, the gate default) bounds the posting-list length
     * per (tbl, hash) via [[Skew.capBuckets]] — the 100 TB control for
@@ -245,151 +200,131 @@ object Knn {
       k2: Int,
       multiprobe: Boolean = false,
       bucketCap: Int = 0,
-      candidateFilter: Option[DataFrame] = None): DataFrame = {
-    import spark.implicits._
-    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
-    // Live views: tombstoned ids (Index.delete) are anti-joined out; with no
-    // tombstones the plan is the plain scan.
-    val vectors = Index.liveVectors(spark, indexDir)
-
-    // 1. GET query docs: precomputed hashes + stored vectors, no re-hash
-    // (A7). One pushed-filter scan; the rows are |Q|-small by contract.
-    val qRows = vectors.filter(col("vec_id") < queryMaxId)
-      .select(col("vec_id"), col("hashes"), col("embedding")).collect()
-    val probeKeys: Seq[(Long, Int, Long)] = qRows.toSeq.flatMap { r =>
-      probesOf(r.getLong(0), r.getSeq[Long](1), model, multiprobe)
-    }.distinct
-
-    // 2. Probe postings under a static partition prune (lossless — see
-    // Index scaladoc). The probe list itself is a tiny local relation.
-    val pkeys = probeKeys.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
-    // dropDuplicates AFTER the partition prune: append-after-delete can
-    // leave duplicate copies of a posting row, and deduping here costs a
-    // shuffle of only the probed buckets, not the corpus. Skipped entirely
-    // on a never-appended layout (no `appends/` markers): a fresh build or
-    // exactly-once streamed bootstrap cannot hold duplicate copies, and the
-    // collapse would be one pure-overhead exchange per search.
-    val appended = everAppended(spark, indexDir)
-    val scanned = Index.livePostings(spark, indexDir)
-      .filter(col(Index.PKeyCol).isin(pkeys: _*))
-    val pruned =
-      if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
-    val postings = if (bucketCap > 0) Skew.capBuckets(pruned, bucketCap) else pruned
-    val qposts = probeKeys.toDF("query_id", "tbl", "hash")
-
-    // 3. A5: collision counting, then A6: exact re-rank — identical shape to
-    // lshSearch but over the pruned stored postings (deduplicated above, so
-    // a plain count IS the distinct-table collision count).
-    val rawCollisions = postings
-      .join(broadcast(qposts), Seq("tbl", "hash"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(count(lit(1)).as("collisions"))
-    // Metadata predicate (filtered search): drop disallowed candidates
-    // BEFORE the k1 cut so every k1 slot holds a servable candidate — see
-    // [[lshTopKFilteredIndexed]].
-    val collisions = candidateFilter match {
-      case Some(allowed) =>
-        rawCollisions.join(allowed.select(col("vec_id")), Seq("vec_id"), "left_semi")
-      case None => rawCollisions
+      candidateFilter: Option[DataFrame] = None): DataFrame =
+    searchLayout(spark, indexDir, k1, k2, multiprobe, bucketCap,
+        col("vec_id") =!= col("query_id"), candidateFilter) { _ =>
+      // GET query docs: precomputed hashes + stored vectors, no re-hash
+      // (A7). One pushed-filter scan; the rows are |Q|-small by contract.
+      Index.liveVectors(spark, indexDir).filter(col("vec_id") < queryMaxId)
+        .select(col("vec_id"), col("hashes"), col("embedding")).collect().toSeq
+        .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Float](2)))
     }
-    val wK1 = Window.partitionBy(col("query_id"))
-      .orderBy(col("collisions").desc, col("vec_id").asc)
-    val k1set = collisions
-      .withColumn("r1", row_number().over(wK1))
-      .filter(col("r1") <= k1)
-      .drop("r1")
 
-    val vecs = vectors.select(col("vec_id"), col("embedding"))
-    // Query vectors come from the rows already fetched in step 1 — a local
-    // relation, not another index scan.
-    val qvecs = qRows.toSeq
-      .map(r => (r.getLong(0), r.getSeq[Float](2)))
-      .toDF("query_id", "qv")
-    // broadcast the CANDIDATE side (|Q|·k1-bounded by contract) — see
-    // [[searchIndexByVector]]: the vectors side is the corpus, and the
-    // scale-safe direction never depends on the fixture's static stats.
-    val rescoredRaw = broadcast(k1set)
-      .join(vecs, "vec_id")
-      .join(broadcast(qvecs), "query_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
-    // duplicate stored copies of an id (append-after-delete) produce
-    // identical rescored rows — collapse them on the k1-sized set, never
-    // on the corpus-sized vectors table; a never-appended layout cannot
-    // hold duplicates, so the collapse exchange is skipped there too.
-    val rescored =
-      if (appended) rescoredRaw.dropDuplicates("query_id", "neighbor_id")
-      else rescoredRaw
-    val wK2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    rescored
-      .withColumn("rank", row_number().over(wK2))
-      .filter(col("rank") <= k2)
-      .select(
-        col("query_id"), col("neighbor_id"), col("rank"),
-        col("collisions"), Det.display(col("dist"), 4).as("dist4"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** A7: search by stored id — the query side is a filter on the indexed
-    * table itself (precomputed hashes, no re-hash), then A5→A6.
-    *
-    * `broadcastQueries` (default true) hints the query posting list / query
-    * vectors for broadcast — correct for the point-lookup gates (≤ a few
-    * hundred queries). For a LARGE query batch pass false: the hint would
-    * force a multi-GB broadcast, and size-based selection + AQE should pick
-    * the shuffle plan instead.
+  /** The indexed search behind [[searchIndex]] and [[searchIndexByVector]].
+    * `queriesOf` turns the index's model into the driver-side
+    * (query_id, hashes, vector) list; the rest is shared: probe the
+    * postings under a static partition prune (lossless — see [[Index]]),
+    * then the [[candidates]] and [[rerank]] stages. Live views keep
+    * tombstoned ids (Index.delete) out; with no tombstones the plan is the
+    * plain scan.
     */
-  def lshSearch(
+  private def searchLayout(
       spark: SparkSession,
-      hashed: DataFrame,
-      queries: DataFrame,
+      indexDir: String,
       k1: Int,
       k2: Int,
-      probeBits: Int = 0,
-      broadcastQueries: Boolean = true): DataFrame = {
-    def hintQ(df: DataFrame): DataFrame = if (broadcastQueries) broadcast(df) else df
-    // Posting lists: (id, tbl, hash) both sides; query side is small → broadcast.
-    val posts = Lsh.explodeHashes(hashed)
-    val qexact = Lsh.explodeHashes(
-      queries.select(col("vec_id").as("query_id"), col("hashes")), "query_id")
-    // Multiprobe: also probe Hamming-1 buckets on the QUERY side only — the
-    // index stays untouched, so the cost is |Q|·tables·bits extra probe keys.
-    val qposts = if (probeBits > 0) Lsh.multiprobe(qexact, probeBits) else qexact
+      multiprobe: Boolean,
+      bucketCap: Int,
+      keep: Column,
+      allowed: Option[DataFrame])(
+      queriesOf: Lsh.LshModel => Seq[(Long, Seq[Long], Seq[Float])]): DataFrame = {
+    import spark.implicits._
+    val (model, numBuckets) = Lsh.loadModelCached(spark, s"$indexDir/model")
+    val queries = queriesOf(model)
+    // Multiprobe expands Hamming-1 flips query-side; the index is untouched.
+    val probes = queries.flatMap { case (qid, hashes, _) =>
+      hashes.zipWithIndex.flatMap { case (h, t) =>
+        (qid, t, h) +: (if (multiprobe) (0 until model.bits).map(b => (qid, t, h ^ (1L << b))) else Nil)
+      }
+    }.distinct
+    val pkeys = probes.map { case (_, t, h) => Index.pkeyOf(t, h, numBuckets) }.distinct
+    // Only a layout that was ever batch-appended to (`appends/` markers
+    // exist from the first Lifecycle.allocateBatch on) can hold duplicate
+    // copies of a posting or vector row. There, postings dedup AFTER the
+    // partition prune (a shuffle of only the probed buckets) and rerank
+    // collapses duplicate rescored rows; elsewhere both exchanges are
+    // skipped. One driver fs stat.
+    val appended = Lifecycle.fsOf(spark, indexDir)
+      .exists(new org.apache.hadoop.fs.Path(s"$indexDir/appends"))
+    val scanned = Index.livePostings(spark, indexDir)
+      .filter(col(Index.PKeyCol).isin(pkeys: _*))
+    val pruned = if (appended) scanned.dropDuplicates("tbl", "hash", "vec_id") else scanned
+    val postings = if (bucketCap > 0) Skew.capBuckets(pruned, bucketCap) else pruned
+    val k1set = candidates(postings, probes.toDF("query_id", "tbl", "hash"), keep, allowed, k1)
+    // Query vectors come from the driver-side list — a local relation, not
+    // another index scan.
+    val qvecs = queries.map { case (qid, _, v) => (qid, v) }.toDF("query_id", "qv")
+    rerank(k1set, Index.liveVectors(spark, indexDir), qvecs, k2, collapseDuplicates = appended)
+  }
 
-    // A5: collision counting — equi-join on (tbl, hash), count per pair.
-    val collisions = posts
-      .join(hintQ(qposts), Seq("tbl", "hash"))
-      .filter(col("vec_id") =!= col("query_id"))
+  /** A5, the candidate stage of every LSH search: equi-join the
+    * (tbl, hash, vec_id) posting lists with the broadcast (query_id, tbl,
+    * hash) probes, keep the pairs `keep` admits, count collisions per
+    * (query, candidate), drop candidates absent from `allowed` BEFORE the
+    * k1 cut (so every k1 slot holds a servable candidate — see
+    * [[lshTopKFilteredIndexed]]), and keep the top k1 per query by
+    * collisions, ties by vec_id. `postings` holds each (tbl, hash, vec_id)
+    * once, so a plain count IS the distinct-table collision count.
+    * Output: (query_id, vec_id, collisions).
+    */
+  private def candidates(
+      postings: DataFrame,
+      probes: DataFrame,
+      keep: Column,
+      allowed: Option[DataFrame],
+      k1: Int): DataFrame = {
+    val counted = postings
+      .join(broadcast(probes), Seq("tbl", "hash"))
+      .filter(keep)
       .groupBy(col("query_id"), col("vec_id"))
       .agg(count(lit(1)).as("collisions"))
-
+    val servable = allowed.fold(counted)(a =>
+      counted.join(a.select(col("vec_id")), Seq("vec_id"), "left_semi"))
     val wK1 = Window.partitionBy(col("query_id"))
       .orderBy(col("collisions").desc, col("vec_id").asc)
-    val k1set = collisions
+    servable
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
       .drop("r1")
+  }
 
-    // A6: exact re-rank of the k1 candidates.
-    val vecs = hashed.select(col("vec_id"), col("embedding"))
-    val qvecs = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val rescored = k1set
-      .join(vecs, "vec_id")
-      .join(hintQ(qvecs), "query_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"), col("collisions"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
+  /** A6, the exact re-rank stage of every two-phase search (LSH here, the
+    * quantized-ANN families in [[Pq]]): L2 from each (query_id, vec_id)
+    * candidate to its query vector in `qvecs` (query_id, qv), top k2 per
+    * query by distance, ties by neighbor_id. Any other candidate column
+    * (the LSH collision count) is carried through.
+    * Output: (query_id, neighbor_id, rank, <carried>, dist4).
+    *
+    * `collapseDuplicates`: duplicate stored copies of an id
+    * (append-after-delete) produce identical rescored rows; they collapse
+    * on the k1-sized set, never on the corpus-sized vectors table.
+    */
+  private[operators] def rerank(
+      candidates: DataFrame,
+      vectors: DataFrame,
+      qvecs: DataFrame,
+      k2: Int,
+      collapseDuplicates: Boolean): DataFrame = {
+    val carried = candidates.columns.filterNot(Set("query_id", "vec_id")).map(col).toSeq
+    // broadcast the CANDIDATE side: it is |Q|·k1 rows BY CONTRACT (the k1
+    // window just cut it), while `vectors` is the CORPUS. Unhinted, Catalyst
+    // compared the fixture-tiny vectors scan against the candidates'
+    // post-window estimate and broadcast the corpus, which inverts at scale
+    // (PlanSpec locks this direction).
+    val rescored = broadcast(candidates)
+      .join(vectors.select(col("vec_id"), col("embedding")), "vec_id")
+      .join(broadcast(qvecs), "query_id")
+      .select((col("query_id") +: col("vec_id").as("neighbor_id") +: carried) :+
+        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"): _*)
+    val unique =
+      if (collapseDuplicates) rescored.dropDuplicates("query_id", "neighbor_id") else rescored
     val wK2 = Window.partitionBy(col("query_id"))
       .orderBy(col("dist").asc, col("neighbor_id").asc)
-    rescored
+    unique
       .withColumn("rank", row_number().over(wK2))
       .filter(col("rank") <= k2)
-      .select(
-        col("query_id"), col("neighbor_id"), col("rank"),
-        col("collisions"), Det.display(col("dist"), 4).as("dist4"))
+      .select((Seq(col("query_id"), col("neighbor_id"), col("rank")) ++ carried) :+
+        Det.display(col("dist"), 4).as("dist4"): _*)
       .orderBy(col("query_id"), col("rank"))
   }
 

@@ -239,7 +239,7 @@ object Pq {
   }
 
   /** Phase 1: ADC-score a (query_id, vec_id, codes) frame, keep top-k1 per
-    * query (ties by vec_id).
+    * query (ties by vec_id) as (query_id, vec_id) for [[Knn.rerank]].
     */
   private def adcTopK1(paired: DataFrame, q: QuerySide, k1: Int): DataFrame = {
     val wK1 = Window.partitionBy(col("query_id"))
@@ -250,30 +250,7 @@ object Pq {
         VectorExpressions.adc(col("query_id"), col("codes"), q.adcTables).as("approx_dist"))
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
-  }
-
-  /** Phase 2: exact re-rank of the k1 candidates — only these rows ever read
-    * a real embedding. Output shape matches the other ANN gates.
-    */
-  private def rerank(candidates: DataFrame, emb: DataFrame, qvecs: DataFrame, k2: Int): DataFrame = {
-    val wK2 = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    // broadcast the CANDIDATE side (r14): it is |Q|·k1 rows BY CONTRACT (the
-    // k1 window just cut it), while `emb` is the CORPUS — unhinted, Catalyst
-    // compared the fixture-tiny vectors scan against the candidates'
-    // post-window estimate and broadcast the corpus (BuildRight over the
-    // full embeddings FileScan in the executed plan), which inverts at
-    // scale. Same direction [[Knn.searchIndex]] has always hinted.
-    broadcast(candidates)
-      .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(qvecs), "query_id")
-      .select(
-        col("query_id"), col("vec_id").as("neighbor_id"),
-        VectorExpressions.l2(col("qv"), col("embedding")).as("dist"))
-      .withColumn("rank", row_number().over(wK2))
-      .filter(col("rank") <= k2)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), Det.display(col("dist"), 4).as("dist4"))
-      .orderBy(col("query_id"), col("rank"))
+      .select(col("query_id"), col("vec_id"))
   }
 
   private def writePqModel(spark: SparkSession, model: PqModel, dir: String): Unit = {
@@ -302,7 +279,7 @@ object Pq {
     val q = querySide(spark, emb, model, queryMaxId)
     // ADC scan: |Q| passes over the CODE column only (queries broadcast).
     val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k2, collapseDuplicates = false)
   }
 
   /** Persisted PQ index: `model/` (codebooks, one row) + `codes/`
@@ -398,7 +375,7 @@ object Pq {
     val emb = Tables.embeddings(spark, sfDir)
     val q = querySide(spark, emb, model, queryMaxId)
     val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k2, collapseDuplicates = false)
   }
 
   /** The phase-1 ADC candidate scan in isolation (plan-inspection surface
@@ -497,7 +474,7 @@ object Pq {
     val codes = encodeSq(spark, emb, sq)
     val q = querySide(spark, emb, sq.asPqModel, queryMaxId)
     val candidates = adcTopK1(codes.crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k2, collapseDuplicates = false)
   }
 
   /** Persisted SQ8 index: `model/` (dim, mins, scales — one row) + `codes/`
@@ -580,7 +557,7 @@ object Pq {
     val emb = Tables.embeddings(spark, sfDir)
     val q = querySide(spark, emb, model.asPqModel, queryMaxId)
     val candidates = adcTopK1(liveSqCodes(spark, indexDir).crossJoin(broadcast(q.queries)), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k2, collapseDuplicates = false)
   }
 
   /** The SQ8 phase-1 scan in isolation (PlanSpec: ReadSchema must contain
@@ -722,7 +699,7 @@ object Pq {
       .filter(col("cell").isin(probes.map(_._2).distinct: _*))
     val probesDf = probes.toDF("query_id", "cell")
     val candidates = adcTopK1(codes.join(broadcast(probesDf), "cell"), q, k1)
-    rerank(candidates, emb, q.qvecs, k2)
+    Knn.rerank(candidates, emb, q.qvecs, k2, collapseDuplicates = false)
   }
 
   // ------------------------------------------------------------------ BQ
@@ -829,7 +806,8 @@ object Pq {
   }
 
   /** Phase 1: Hamming-score a (query_id, vec_id, code) frame, keep top-k1
-    * per query (ties by vec_id). `bit_count(xor)` is a codegen'd integer
+    * per query (ties by vec_id) as (query_id, vec_id) for [[Knn.rerank]].
+    * `bit_count(xor)` is a codegen'd integer
     * intrinsic — the cheapest approximate-distance scan the engine has.
     */
   private def hammingTopK1(paired: DataFrame, k1: Int): DataFrame = {
@@ -841,6 +819,7 @@ object Pq {
         bit_count(col("code").bitwiseXOR(col("qcode"))).as("ham"))
       .withColumn("r1", row_number().over(wK1))
       .filter(col("r1") <= k1)
+      .select(col("query_id"), col("vec_id"))
   }
 
   /** q155 — BQ ANN (no SQL oracle — quantization-dependent; pinned by
@@ -859,7 +838,7 @@ object Pq {
     val codes = encodeBq(spark, emb, model)
     val (qcodes, qvecs) = bqQuerySide(spark, emb, model, queryMaxId)
     val candidates = hammingTopK1(codes.crossJoin(broadcast(qcodes)), k1)
-    rerank(candidates, emb, qvecs, k2)
+    Knn.rerank(candidates, emb, qvecs, k2, collapseDuplicates = false)
   }
 
   /** Persisted BQ index: `model/` (dim, thr6 — one row) + `codes/`
@@ -944,7 +923,7 @@ object Pq {
     val (qcodes, qvecs) = bqQuerySide(spark, emb, model, queryMaxId)
     val candidates = hammingTopK1(
       liveBqCodes(spark, indexDir).crossJoin(broadcast(qcodes)), k1)
-    rerank(candidates, emb, qvecs, k2)
+    Knn.rerank(candidates, emb, qvecs, k2, collapseDuplicates = false)
   }
 
   /** The BQ phase-1 scan in isolation (PlanSpec: ReadSchema must contain

@@ -288,6 +288,30 @@ class LshSpec extends SparkSpec {
     Index.append(spark, dir, emb.filter(col("vec_id") === victim))
     val after = Knn.searchIndex(spark, dir, 4, 100, 10).collect().map(_.toSeq).toSeq
     assert(after == before, "re-added vector should restore the original results")
+    // The by-vector entry point on the same duplicate-holding layout: a
+    // query whose neighbours include the re-added id, searched by value
+    // with its own id excluded, returns exactly the stored-id rows.
+    val v = before.find(_(1) == victim).get(0).asInstanceOf[Long]
+    val values = emb.filter(col("vec_id") === v).collect()(0).getSeq[Float](1).toArray
+    Seq(false, true).foreach { mp =>
+      val stored = Knn.searchIndex(spark, dir, 4, 100, 10, multiprobe = mp)
+        .filter(col("query_id") === v).collect().map(_.toSeq.tail).toSeq
+      val byVec = Knn.searchIndexByVector(spark, dir, values, 100, 10,
+        multiprobe = mp, excludeIds = Seq(v)).collect().map(_.toSeq.tail).toSeq
+      assert(stored.nonEmpty && byVec == stored, s"multiprobe=$mp: by-vector rows differ")
+    }
+  }
+
+  test("by-vector search refuses a query vector whose length is not the index dim") {
+    val dir = Index.ensure(spark, sf0001)
+    val dim = Tables.embeddings(spark, sf0001).select(col("embedding")).head().getSeq[Float](0).length
+    Seq(dim - 1, dim + 1).foreach { n =>
+      val e = intercept[IllegalArgumentException] {
+        Knn.searchIndexByVector(spark, dir, Array.fill(n)(0.5f), 100, 10)
+      }
+      assert(e.getMessage.contains(s"$n components") && e.getMessage.contains(s"dim $dim") &&
+        e.getMessage.contains(dir), e.getMessage)
+    }
   }
 
   test("append with a CHANGED embedding supersedes the old version (upsert)") {

@@ -122,10 +122,15 @@ class PlanSpec extends SparkSpec {
         p.children.flatMap(unreducedScans)
       case _ => Nil
     }
+    // AdaptiveSparkPlanExec and the query stages of an executed adaptive
+    // plan are leaves to TreeNode traversal, so their plans are recursed
+    // explicitly: in the FINAL plan every broadcast sits inside a stage.
     def walk(p: SparkPlan): Seq[String] = {
       val here = p.collect { case b: BroadcastExchangeLike => unreducedScans(b.child) }.flatten
-      val nested = p.collect { case a: AdaptiveSparkPlanExec => a }
-        .flatMap(a => walk(a.executedPlan))
+      val nested = p.collect {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case q: QueryStageExec => q.plan
+      }.flatMap(walk)
       here ++ nested
     }
     // Execute first (collect, not count — count would execute a derived
@@ -147,11 +152,21 @@ class PlanSpec extends SparkSpec {
   }
 
   test("quantized-ANN rerank broadcasts candidates, never the vector table (r14 lock)") {
-    // The flat + indexed paths of all three quantizer families share
-    // Pq.rerank; one gate per shape keeps the lock cheap.
-    Seq("q90_sq8_ann", "q71_pq_ann_indexed", "q155_bq_ann").foreach { q =>
+    // Every two-phase search re-ranks through Knn.rerank; one gate per
+    // shape keeps the lock cheap. The quantized families re-rank against
+    // the `embeddings` table, the LSH searches against the index's
+    // `vectors/` directory (q120's broadcast label filter legitimately
+    // scans `embeddings`).
+    val indexVectors = (p: String) => p.contains("graft-lsh-index-") && p.endsWith("/vectors")
+    Seq(
+      "q90_sq8_ann" -> ((p: String) => p.contains("embeddings")),
+      "q71_pq_ann_indexed" -> ((p: String) => p.contains("embeddings")),
+      "q155_bq_ann" -> ((p: String) => p.contains("embeddings")),
+      "q23_lsh_knn" -> indexVectors,
+      "q120_knn_filtered_indexed" -> indexVectors,
+      "q166_knn_by_vector" -> indexVectors).foreach { case (q, isCorpus) =>
       val paths = broadcastScanPaths(SparkEntry.queries(q)(spark, sf001))
-      assert(!paths.exists(_.contains("embeddings")),
+      assert(!paths.exists(isCorpus),
         s"$q broadcasts the corpus vector table: ${paths.mkString(", ")}")
     }
   }
