@@ -33,30 +33,32 @@ object Memo {
 
   private val keyLocks = new ConcurrentHashMap[String, Object]()
 
+  /** Run `body` holding the per-key lock for `key`: same-key bodies
+    * serialize, unrelated keys stay fully concurrent (never the map's bin
+    * lock). Lock entries are deliberately never removed: eager cleanup
+    * opens a narrow window where a finisher's removal lets a racing caller
+    * mint a fresh lock and double-run a side-effecting body — the exact bug
+    * this lock exists to prevent. Growth is bounded by DISTINCT keys ever
+    * locked (~16 bytes each; one per fixture rebuild in practice). A body
+    * re-entering its OWN key from another thread deadlocks — side-effecting
+    * bodies are leaves by contract.
+    */
+  def exclusive[T](key: String)(body: => T): T =
+    keyLocks.computeIfAbsent(key, _ => new Object).synchronized(body)
+
   /** [[once]] for SIDE-EFFECTING loaders (an artifact write, a directory
     * build) where a miss-race double load is NOT benign: two threads
     * running the loader concurrently would race two Overwrite jobs on one
-    * artifact path. Same-KEY loads serialize on a dedicated per-key lock —
-    * never the map's bin lock, so unrelated keys stay fully concurrent and
-    * a loader may still load OTHER keys through the same map. (A loader
-    * recursing through its OWN key would self-deadlock, exactly as it
-    * would have under `computeIfAbsent` — side-effecting loaders are
-    * leaves by contract.)
+    * artifact path. Same-KEY loads serialize on [[exclusive]]; a loader may
+    * still load OTHER keys through the same map.
     */
   def onceExclusive[V <: AnyRef](map: ConcurrentHashMap[String, V], key: String)(load: => V): V = {
     val cached = map.get(key)
     if (cached != null) cached
-    else {
+    else
       // Lock identity includes the CALLER'S map so equal key strings from
-      // unrelated caches never serialize on one lock. Lock entries are
-      // deliberately never removed: eager cleanup opens a narrow window
-      // where a finisher's removal lets a racing post-bump reloader mint a
-      // fresh lock and double-run a side-effecting loader — the exact bug
-      // this variant exists to prevent. Growth is bounded by DISTINCT keys
-      // ever loaded exclusively (~16 bytes each; one per fixture rebuild in
-      // practice), a fair price for exclusivity that holds by construction.
-      val lockKey = s"${System.identityHashCode(map)}:$key"
-      keyLocks.computeIfAbsent(lockKey, _ => new Object).synchronized {
+      // unrelated caches never serialize on one lock.
+      exclusive(s"${System.identityHashCode(map)}:$key") {
         val again = map.get(key)
         if (again != null) again
         else {
@@ -66,6 +68,5 @@ object Memo {
           loaded
         }
       }
-    }
   }
 }

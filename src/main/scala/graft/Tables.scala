@@ -79,22 +79,18 @@ object Tables {
         // filesystem-theoretic limit every stat-keyed cache shares,
         // documented on [[fixtureSig]]'s consumers.
         val sig = s"${st.getModificationTime}:${st.getLen}"
-        // onceExclusive: the miss path writes the layout dir — two racing
-        // builders would race two Overwrite jobs on one path.
-        Memo.onceExclusive(ingestMemo, s"$src:$sig:p$parallelism") {
-          val key = graft.operators.Index.cacheKey(
-            s"$src:$sig:ingest:p$parallelism:v${graft.operators.Index.LayoutVersion}")
+        // Path memo over the store: scans resolve their table on every
+        // query, and the store's lock already builds a key once.
+        Memo.once(ingestMemo, s"$src:$sig:p$parallelism") {
           // the table name stays in the layout dir (and so in every
           // FileScan plan line): plans must remain greppable by table
-          val base = p.getName.stripSuffix(".parquet")
-          val dir = new java.io.File(
-            sys.props("java.io.tmpdir"), s"graft-ingest-$base-$key")
-          if (!new java.io.File(dir, "_SUCCESS").exists())
+          Stores.ensure(spark, s"ingest-${p.getName.stripSuffix(".parquet")}", src,
+              s"p$parallelism") { dir =>
             spark.read.parquet(src)
               .repartition(parallelism)
               .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .parquet(dir.getAbsolutePath)
-          dir.getAbsolutePath
+              .parquet(dir)
+          }
         }
       case _ => src
     }

@@ -452,13 +452,9 @@ object Components {
       maxDocId: Long = 100,
       threshold: Double = 0.8,
       batchMod: Long = 2,
-      batchRem: Long = 1): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:label-store:$maxDocId:$threshold:$batchMod:$batchRem:v1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-label-store-$key")
-    Lifecycle.settleStore(spark, dir.getAbsolutePath) // see ensureDigestStore
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+      batchRem: Long = 1): String =
+    graft.Stores.ensure(spark, "label-store", s"$sfDir/documents.parquet",
+        s"$maxDocId:$threshold:$batchMod:$batchRem") { dir =>
       val corpus = Tables.documents(spark, sfDir)
         .filter(col("doc_id") < maxDocId && col("doc_id") % batchMod =!= batchRem)
         .select(col("doc_id").as("v"))
@@ -467,10 +463,8 @@ object Components {
         .select(col("i"), col("j"))
       val labels = connectedComponents(corpus, edges)
         .select(col("v").as("doc_id"), col("label").as("cluster_id"))
-      buildLabelStore(spark, labels, dir.getAbsolutePath)
+      buildLabelStore(spark, labels, dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** Union-find components for a DELIVERY-bounded graph — same (v, label)
     * contract as [[connectedComponents]] (label = component min), different
@@ -600,34 +594,27 @@ object Components {
       .select(col("v").as("old_label"), col("label").as("new_label"))
 
   /** Commit an admitted delivery: remap merged labels across the store and
-    * append the batch assignments, in ONE write-aside + two-rename swap
-    * (the [[Text.compactStore]] crash protocol — a crash between the
-    * renames is settled forward by the next store operation). Single-writer
-    * maintenance contract, like every store compaction.
+    * append the batch assignments, in ONE store swap
+    * ([[Lifecycle.rewriteStore]] — a crash between the renames is settled
+    * forward by the next store operation). Single-writer maintenance
+    * contract, like every store compaction.
     */
   def commitIncrement(
       spark: SparkSession,
       storeDir: String,
       assignments: DataFrame,
-      merges: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = Lifecycle.settleStore(spark, storeDir)
-    val fs = Lifecycle.fsOf(spark, dir)
-    val live = new Path(dir)
-    val old = new Path(s"${dir}_old")
-    val tmp = new Path(s"${dir}_compacting")
-    Lifecycle.clearSwapStaging(fs, old, tmp)
-    val remapped = spark.read.parquet(dir)
-      .join(broadcast(merges.withColumnRenamed("old_label", "slabel")),
-        Seq("slabel"), "left")
-      .select(
-        col("sdoc_id"),
-        coalesce(col("new_label"), col("slabel")).as("slabel"))
-      .unionByName(assignments.select(
-        col("doc_id").as("sdoc_id"), col("cluster_id").as("slabel")))
-    remapped.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-    Lifecycle.promoteSwap(fs, live, old, tmp)
-  }
+      merges: DataFrame): Unit =
+    Lifecycle.rewriteStore(spark, storeDir) { (dir, tmp) =>
+      spark.read.parquet(dir)
+        .join(broadcast(merges.withColumnRenamed("old_label", "slabel")),
+          Seq("slabel"), "left")
+        .select(
+          col("sdoc_id"),
+          coalesce(col("new_label"), col("slabel")).as("slabel"))
+        .unionByName(assignments.select(
+          col("doc_id").as("sdoc_id"), col("cluster_id").as("slabel")))
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+    }
 
   def clusterIncrementOracle(
       maxDocId: Long = 100, threshold: Double = 0.8): String =

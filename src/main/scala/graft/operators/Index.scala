@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -126,9 +124,10 @@ object Index {
     graft.Readers.bump()
   }
 
-  /** Build-once cache for the gate queries: the index for (sfDir, params)
-    * lives in the JVM temp dir, keyed by the embeddings fixture's mtime so a
-    * regenerated fixture invalidates it. Returns the index directory.
+  /** Build-once cache for the gate queries ([[graft.Stores.ensure]]): the
+    * index for (sfDir, params) lives in the JVM temp dir, keyed by the
+    * embeddings fixture's signature so a regenerated fixture invalidates
+    * it. Returns the index directory.
     *
     * `bits = 0` (the default) derives the hash width from the corpus count
     * at BUILD time via [[Lsh.deriveBits]] — one cheap `count()`, paid only
@@ -142,18 +141,13 @@ object Index {
       tables: Int = 32,
       bits: Int = 0,
       numBuckets: Int = 64): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
     val bitsKey = if (bits > 0) bits.toString else "auto"
-    val key = cacheKey(
-      s"$sfDir:$srcSig:$tables:$bitsKey:$numBuckets:v$LayoutVersion")
-    val dir = new File(sys.props("java.io.tmpdir"), s"graft-lsh-index-$key")
-    if (!new File(dir, "postings/_SUCCESS").exists()) {
+    graft.Stores.ensure(spark, "lsh-index", s"$sfDir/embeddings.parquet",
+        s"$tables:$bitsKey:$numBuckets") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
       val useBits = if (bits > 0) bits else Lsh.deriveBits(Tables.embeddingsCount(spark, sfDir))
-      val model = Lsh.fit(emb, tables, useBits)
-      build(spark, emb, model, dir.getAbsolutePath, numBuckets)
+      build(spark, emb, Lsh.fit(emb, tables, useBits), dir, numBuckets)
     }
-    dir.getAbsolutePath
   }
 
   /** Incremental ingest (the reference's online `_aknn_index` lifecycle,
@@ -226,36 +220,28 @@ object Index {
     * (live→old, compacting→live). The window between them is not atomic on
     * a generic filesystem — compact is a single-writer MAINTENANCE op, run
     * it without concurrent readers (a table format with atomic commits —
-    * Delta/Iceberg — is the production answer). Crash recovery is explicit:
-    * a leftover `postings_old` from a crashed run is rolled back or cleaned
-    * on the next call, so a crashed compact never wedges the index.
+    * Delta/Iceberg — is the production answer). Crash recovery is the
+    * shared [[Lifecycle.settleSwap]] protocol: a leftover `postings_old`
+    * from a crashed run is rolled forward or cleaned on the next call, so a
+    * crashed compact never wedges the index.
     */
   def compact(spark: SparkSession, indexDir: String): Unit = {
     // Hadoop FS throughout (same reason as the tombstone check): indexDir
     // may be an hdfs:// URI, where java.io.File renames/exists silently
     // operate on a bogus local path.
+    val fs = Lifecycle.fsOf(spark, indexDir)
     val live = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = new org.apache.hadoop.fs.Path(s"$indexDir/postings_old")
     val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/postings_compacting")
-    // Recover from a previous crashed compact: if the swap died after
-    // staging live aside, roll postings_old back; if live exists too, the
-    // old copy is superseded garbage.
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) require(fs.rename(old, live), s"could not roll back $old")
-      else fs.delete(old, true)
-    }
-    if (fs.exists(tmp)) fs.delete(tmp, true) // half-written crashed output
+    Lifecycle.settleSwap(fs, live, old)
+    Lifecycle.clearSwapStaging(fs, old, tmp)
     postings(spark, indexDir)
       .select(col("vec_id"), col(BatchCol), col("tbl"), col("hash"), col(PKeyCol))
       .repartition(col(PKeyCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(PKeyCol)
       .parquet(tmp.toString)
-    require(fs.rename(live, old), s"could not stage $live aside")
-    require(fs.rename(tmp, live), s"could not promote $tmp")
-    fs.delete(old, true)
-    graft.Readers.bump()
+    Lifecycle.promoteSwap(fs, live, old, tmp)
   }
 
   /** Purging compaction: rewrite `vectors/` + `postings/` keeping only live

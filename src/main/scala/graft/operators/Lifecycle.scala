@@ -33,7 +33,7 @@ object Lifecycle {
 
   /** The write-aside / two-rename swap protocol, stated ONCE for every
     * swap-managed directory ([[vacuum]] parts, [[adoptStreamedLayout]],
-    * `Text.compactStore` on digest/band stores). Three helpers so a
+    * [[Index.compact]], [[rewriteStore]] on whole store dirs). Three helpers so a
     * protocol fix can never silently miss one copy:
     *
     * [[settleSwap]] rolls a crashed swap forward — when a maintenance op
@@ -82,14 +82,35 @@ object Lifecycle {
   /** Settle a crashed store-compaction swap at a store entry point:
     * slash-normalize the dir (the `_old`/`_compacting` sibling naming
     * breaks on a trailing slash) and roll a crashed [[promoteSwap]]
-    * forward via [[settleSwap]]. Returns the normalized dir. Shared by
-    * ALL persisted store families (digest/band/cell) so a protocol fix
-    * can never silently miss one copy.
+    * forward via [[settleSwap]]. Returns the normalized dir. Every store
+    * entry point (ensure, build, append, probe, rewrite) settles first.
     */
   def settleStore(spark: SparkSession, storeDir: String): String = {
     val norm = storeDir.replaceAll("/+$", "")
     settleSwap(fsOf(spark, norm), new Path(norm), new Path(s"${norm}_old"))
     norm
+  }
+
+  /** Rewrite a whole store directory through the swap — the one step
+    * behind store compaction and label-store commits: settle, clear
+    * staging, `write(dir, tmp)` the new contents into `tmp`, carry the
+    * store's [[graft.Stores.Sentinel]] across (without it the next ensure
+    * would rebuild over the rewritten rows), then [[promoteSwap]].
+    * Single-writer maintenance contract, like [[vacuum]]: an append landing
+    * between the snapshot read and the swap is dropped.
+    */
+  def rewriteStore(spark: SparkSession, storeDir: String)(write: (String, String) => Unit): Unit = {
+    val dir = settleStore(spark, storeDir)
+    val fs = fsOf(spark, dir)
+    val live = new Path(dir)
+    val old = new Path(s"${dir}_old")
+    val tmp = new Path(s"${dir}_compacting")
+    clearSwapStaging(fs, old, tmp)
+    write(dir, tmp.toString)
+    val sentinel = new Path(live, graft.Stores.Sentinel)
+    if (fs.exists(sentinel))
+      writeMarker(fs, new Path(tmp, graft.Stores.Sentinel), readMarker(fs, sentinel))
+    promoteSwap(fs, live, old, tmp)
   }
 
   /** Tiny whole-file marker I/O for store/layout identity sentinels

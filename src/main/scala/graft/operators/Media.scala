@@ -298,20 +298,14 @@ object Media {
     * Same ensure* discipline as [[graft.operators.Text.ensureShinglePairs]]:
     * keyed by fixture mtime + hash params, deterministic rebuild.
     */
-  def ensurePhashStore(spark: SparkSession, sfDir: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = graft.operators.Index.cacheKey(
-      s"$sfDir:$srcSig:phash:dhash:v${graft.operators.Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-phash-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+  def ensurePhashStore(spark: SparkSession, sfDir: String): String =
+    graft.Stores.ensure(spark, "phash", s"$sfDir/documents.parquet", "dhash") { dir =>
       val ah = udf((p: Array[Byte]) => dHash(p))
       mediaTable(spark, sfDir)
         .select(col("media_id"), ah(col("payload")).as("ph"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
+        .parquet(dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** q161 gate path — perceptual near-dup pairs over the PERSISTED
     * signature store ([[ensurePhashStore]]): the banding self-join reads

@@ -344,14 +344,11 @@ object Pq {
     }
 
   /** Build-once cache keyed like [[Index.ensure]]. */
-  def ensurePqIndex(spark: SparkSession, sfDir: String, m: Int = 8, k: Int = 16): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val key = Index.cacheKey(s"$sfDir:$srcSig:pq:$m:$k:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-pq-index-$key")
-    if (!new java.io.File(dir, "codes/_SUCCESS").exists())
-      buildPqIndex(spark, Tables.embeddings(spark, sfDir), fit(Tables.embeddings(spark, sfDir), m, k), dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+  def ensurePqIndex(spark: SparkSession, sfDir: String, m: Int = 8, k: Int = 16): String =
+    graft.Stores.ensure(spark, "pq-index", s"$sfDir/embeddings.parquet", s"$m:$k") { dir =>
+      val emb = Tables.embeddings(spark, sfDir)
+      buildPqIndex(spark, emb, fit(emb, m, k), dir)
+    }
 
   /** q71 — PQ ANN against the PERSISTED code table: identical semantics to
     * [[annPq]] (same deterministic fit ⇒ same codes ⇒ same results, asserted
@@ -528,16 +525,11 @@ object Pq {
     }
 
   /** Build-once cache keyed like [[ensurePqIndex]]. */
-  def ensureSqIndex(spark: SparkSession, sfDir: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val key = Index.cacheKey(s"$sfDir:$srcSig:sq8:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-sq-index-$key")
-    if (!new java.io.File(dir, "codes/_SUCCESS").exists()) {
+  def ensureSqIndex(spark: SparkSession, sfDir: String): String =
+    graft.Stores.ensure(spark, "sq-index", s"$sfDir/embeddings.parquet", "sq8") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
-      buildSqIndex(spark, emb, fitSq(emb), dir.getAbsolutePath)
+      buildSqIndex(spark, emb, fitSq(emb), dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** q91 — SQ8 ANN against the PERSISTED code table: identical semantics to
     * [[annSq8]] (deterministic fit ⇒ same codes ⇒ same results, spec-pinned),
@@ -651,21 +643,16 @@ object Pq {
       sfDir: String,
       cells: Int = 16,
       m: Int = 8,
-      k: Int = 16): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:ivfpq:$cells:$m:$k:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-ivfpq-index-$key")
-    if (!new java.io.File(dir, "codes/_SUCCESS").exists()) {
+      k: Int = 16): String =
+    graft.Stores.ensure(spark, "ivfpq-index", s"$sfDir/embeddings.parquet",
+        s"$cells:$m:$k") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
       // coarse quantizer from the shared fitted-model artifact — one fit per
       // (corpus, cells) serves q25/q29/q72; identical deterministic centroids
       buildIvfPqIndexWith(spark, emb,
         Vectors.kmeansModel(spark, sfDir, k = cells, iterations = 1),
-        fit(emb, m, k), dir.getAbsolutePath)
+        fit(emb, m, k), dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** q72 — IVF-PQ ANN: probe nprobe cells (partition-pruned), ADC-scan their
     * codes, exact re-rank the k1 survivors. At nprobe = cells the candidate
@@ -892,16 +879,11 @@ object Pq {
     }
 
   /** Build-once cache keyed like [[ensureSqIndex]]. */
-  def ensureBqIndex(spark: SparkSession, sfDir: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val key = Index.cacheKey(s"$sfDir:$srcSig:bq:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-bq-index-$key")
-    if (!new java.io.File(dir, "codes/_SUCCESS").exists()) {
+  def ensureBqIndex(spark: SparkSession, sfDir: String): String =
+    graft.Stores.ensure(spark, "bq-index", s"$sfDir/embeddings.parquet", "bq") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
-      buildBqIndex(spark, emb, fitBq(emb), dir.getAbsolutePath)
+      buildBqIndex(spark, emb, fitBq(emb), dir)
     }
-    dir.getAbsolutePath
-  }
 
   /** q156 — BQ ANN against the PERSISTED code table: identical semantics
     * to [[annBq]] (deterministic fit ⇒ same codes ⇒ same results,

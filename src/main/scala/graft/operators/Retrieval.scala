@@ -404,28 +404,18 @@ object Retrieval {
       .sortWithinPartitions(col("doc_id"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outDir)
 
-  def ensureNormsStore(spark: SparkSession, sfDir: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = graft.operators.Index.cacheKey(
-      s"$sfDir:$srcSig:norms:v${graft.operators.Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-norms-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      buildNormsStore(spark, Tables.documents(spark, sfDir), dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+  def ensureNormsStore(spark: SparkSession, sfDir: String): String =
+    graft.Stores.ensure(spark, "norms", s"$sfDir/documents.parquet", "") { dir =>
+      buildNormsStore(spark, Tables.documents(spark, sfDir), dir)
+    }
 
-  def ensureVocabStore(spark: SparkSession, sfDir: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = graft.operators.Index.cacheKey(
-      // ":sorted:" = the r14 term-sorted layout (same marker discipline as
-      // the postings store key) — a layout change must never serve a stale
-      // pre-sort directory under the old key.
-      s"$sfDir:$srcSig:vocab:sorted:v${graft.operators.Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-vocab-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      buildVocabStore(spark, Tables.documents(spark, sfDir), dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+  // "sorted" = the r14 term-sorted layout (same marker discipline as the
+  // postings store key) — a layout change must never serve a stale
+  // pre-sort directory under the old key.
+  def ensureVocabStore(spark: SparkSession, sfDir: String): String =
+    graft.Stores.ensure(spark, "vocab", s"$sfDir/documents.parquet", "sorted") { dir =>
+      buildVocabStore(spark, Tables.documents(spark, sfDir), dir)
+    }
 
   /** The vocabulary as a DataFrame (term, n_hits, n_docs). */
   def vocab(spark: SparkSession, sfDir: String): DataFrame =
@@ -1177,15 +1167,10 @@ object Retrieval {
       .sortWithinPartitions(col("term"), col("doc_id"), col("pos"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(outDir)
 
-  def ensurePostingsStore(spark: SparkSession, sfDir: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = graft.operators.Index.cacheKey(
-      s"$sfDir:$srcSig:postings:sorted:v${graft.operators.Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-postings-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
-      buildPostingsStore(spark, Tables.documents(spark, sfDir), dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+  def ensurePostingsStore(spark: SparkSession, sfDir: String): String =
+    graft.Stores.ensure(spark, "postings", s"$sfDir/documents.parquet", "sorted") { dir =>
+      buildPostingsStore(spark, Tables.documents(spark, sfDir), dir)
+    }
 
   /** q159 — PHRASE SEARCH against the POSITIONAL POSTINGS index: the same
     * `match_phrase` semantics as q142 served the way ES actually serves it

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,26 +37,20 @@ object Sources {
     StructField("n_name", StringType),
     StructField("n_regionkey", IntegerType)))
 
-  /** Write-once derivation, keyed by sfDir + source mtime so a regenerated
-    * fixture invalidates the cache. Spark's own `_SUCCESS` marker gates
-    * completeness; `mode(Overwrite)` cleans up any partial attempt.
+  /** Write-once derivation of the nation fixture in format `fmt`
+    * ([[graft.Stores.ensure]]); `mode(Overwrite)` cleans up any partial
+    * attempt.
     */
-  private def derived(spark: SparkSession, sfDir: String, fmt: String): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/nation.parquet")
-    val key = Index.cacheKey(s"$sfDir:$srcSig:v${Index.LayoutVersion}")
-    val dir = new File(sys.props("java.io.tmpdir"), s"graft-source-$fmt-$key")
-    if (!new File(dir, "_SUCCESS").exists()) {
+  private def derived(spark: SparkSession, sfDir: String, fmt: String): String =
+    graft.Stores.ensure(spark, s"source-$fmt", s"$sfDir/nation.parquet", "") { dir =>
       val w = Tables.nation(spark, sfDir).coalesce(1).write.mode("overwrite")
       fmt match {
-        case "json" => w.json(dir.getAbsolutePath)
-        case "csv"  => w.option("header", "true").csv(dir.getAbsolutePath)
-        case "orc"  => w.orc(dir.getAbsolutePath)
-        case "xml"  => w.option("rowTag", "nation").format("xml")
-          .save(dir.getAbsolutePath)
+        case "json" => w.json(dir)
+        case "csv"  => w.option("header", "true").csv(dir)
+        case "orc"  => w.orc(dir)
+        case "xml"  => w.option("rowTag", "nation").format("xml").save(dir)
       }
     }
-    dir.getAbsolutePath
-  }
 
   /** q52 — line-delimited JSON source with explicit schema + aggregate. */
   def jsonSource(spark: SparkSession, sfDir: String): DataFrame =

@@ -983,18 +983,13 @@ object Text {
       k: Int = 12,
       rowsPerBand: Int = 4,
       threshold: Double = 0.9,
-      sampleMod: Int = 3): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:shpairs:$shingleLen:$k:$rowsPerBand:" +
-        s"$threshold:$sampleMod:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-shpairs-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+      sampleMod: Int = 3): String =
+    graft.Stores.ensure(spark, "shpairs", s"$sfDir/documents.parquet",
+        s"$shingleLen:$k:$rowsPerBand:$threshold:$sampleMod") { dir =>
       shingleNearDups(spark, sfDir, shingleLen, k, rowsPerBand, threshold, sampleMod)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        .parquet(dir)
+    }
 
   /** 64-bit SimHash over the token multiset (deterministic FNV-1a token
     * hashes; per-bit majority vote weighted by token frequency).
@@ -1881,18 +1876,14 @@ object Text {
     */
   def ensureLineRemovals(
       spark: SparkSession, sfDir: String,
-      lineWidth: Int = 2, minOcc: Long = 2): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:linerm:$lineWidth:$minOcc:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-linerm-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+      lineWidth: Int = 2, minOcc: Long = 2): String =
+    graft.Stores.ensure(spark, "linerm", s"$sfDir/documents.parquet",
+        s"$lineWidth:$minOcc") { dir =>
       lineRemovalsOf(Tables.documents(spark, sfDir), lineWidth, minOcc,
         LineDictBroadcastMaxRows)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        .parquet(dir)
+    }
 
   /** q193 gate path — the rewrite over the PERSISTED removal map
     * ([[ensureLineRemovals]]): the corpus line-digest passes (dictionary
@@ -1958,10 +1949,8 @@ object Text {
       .distinct()
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(dir)
-    // written LAST: the marker doubles as the completion sentinel (the
-    // band-store discipline) and [[ensureLineDictStore]] keys on it
-    writeMarker(Lifecycle.fsOf(spark, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/_params"),
+    Lifecycle.writeMarker(Lifecycle.fsOf(spark, dir),
+      new org.apache.hadoop.fs.Path(dir, graft.Stores.Sentinel),
       lineDictParamsTag(lineWidth))
   }
 
@@ -1969,7 +1958,7 @@ object Text {
     s"lineWidth=$lineWidth"
 
   private def requireLineDictParams(
-      spark: SparkSession, dir: String, lineWidth: Int, op: String): Unit =
+      spark: SparkSession, dir: String, lineWidth: Int, op: String): String =
     requireStoreParams(spark, dir, "line dict", lineDictParamsTag(lineWidth),
       op, "line digests of different widths can never match correctly")
 
@@ -1981,32 +1970,25 @@ object Text {
       spark: SparkSession, storeDir: String, docs: DataFrame,
       lineWidth: Int = 2): Unit = {
     requireLineWidth(lineWidth)
-    requireLineDictParams(spark, storeDir, lineWidth, "append")
+    val dir = requireLineDictParams(spark, storeDir, lineWidth, "append")
     crossDocLines(docs, lineWidth)
       .select(col("h1").as("sl1"), col("h2").as("sl2"))
       .distinct()
       .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
+      .parquet(dir)
     graft.Readers.bump()
   }
 
   /** Build-once line dictionary over the non-batch corpus slice. */
   def ensureLineDictStore(
       spark: SparkSession, sfDir: String,
-      lineWidth: Int = 2, batchMod: Long = 7, batchRem: Long = 0): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:linedict:$lineWidth:$batchMod:$batchRem:p1:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-linedict-$key")
-    // _params is written LAST and is the completion sentinel (see
-    // ensureBandStore): a crash between the parquet commit and the marker
-    // rebuilds instead of caching a store that refuses appends/probes
-    if (!new java.io.File(dir, "_params").exists())
+      lineWidth: Int = 2, batchMod: Long = 7, batchRem: Long = 0): String =
+    graft.Stores.ensure(spark, "linedict", s"$sfDir/documents.parquet",
+        s"$lineWidth:$batchMod:$batchRem:p1") { dir =>
       buildLineDictStore(spark,
         Tables.documents(spark, sfDir).filter(col("doc_id") % batchMod =!= batchRem),
-        dir.getAbsolutePath, lineWidth)
-    dir.getAbsolutePath
-  }
+        dir, lineWidth)
+    }
 
   /** The per-delivery probe: a delivery line is removed iff its digest is
     * in the dictionary (the corpus already carries it — stored side
@@ -2021,14 +2003,14 @@ object Text {
       spark: SparkSession, batchDocs: DataFrame, storeDir: String,
       lineWidth: Int = 2): DataFrame = {
     requireLineWidth(lineWidth)
-    requireLineDictParams(spark, storeDir, lineWidth, "probe")
+    val dir = requireLineDictParams(spark, storeDir, lineWidth, "probe")
     // NOT pinned — the spanBatchAgainstStore measurement (+0.21 s/query
     // pinned): delivery-bounded recompute beats a checkpoint here.
     val lines = crossDocLines(batchDocs, lineWidth)
     val wdig = Window.partitionBy(col("h1"), col("h2"))
     val flagged = lines.withColumn("first",
       min(struct(col("doc_id"), col("idx"))).over(wdig))
-    val store = graft.Readers.parquet(spark, storeDir)
+    val store = graft.Readers.parquet(spark, dir)
     val hits = store.join(
       broadcast(lines.select(col("h1"), col("h2"))),
       col("sl1") === col("h1") && col("sl2") === col("h2"), "left_semi")
@@ -2561,19 +2543,14 @@ object Text {
       spark: SparkSession,
       sfDir: String,
       evalMod: Long = 19,
-      evalRem: Long = 3): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:cleansurv:$evalMod:$evalRem:q${QualityMinTokens}:" +
-        s"v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-cleansurv-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+      evalRem: Long = 3): String =
+    graft.Stores.ensure(spark, "cleansurv", s"$sfDir/documents.parquet",
+        s"$evalMod:$evalRem:q$QualityMinTokens") { dir =>
       cleanCorpusOf(
         Tables.documents(spark, sfDir).filter(col("doc_id") % evalMod =!= evalRem))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        .parquet(dir)
+    }
 
   /** Build-once PERSISTED decontamination verdict — the q80 contaminated
     * train-doc ids on disk (stage-4 of the q101 recipe as an artifact; the
@@ -2585,18 +2562,14 @@ object Text {
       sfDir: String,
       gram: Int = 8,
       evalMod: Long = 19,
-      evalRem: Long = 3): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:contam:$gram:$evalMod:$evalRem:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-contam-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+      evalRem: Long = 3): String =
+    graft.Stores.ensure(spark, "contam", s"$sfDir/documents.parquet",
+        s"$gram:$evalMod:$evalRem") { dir =>
       decontaminate(spark, sfDir, gram, evalMod, evalRem)
         .select(col("doc_id"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        .parquet(dir)
+    }
 
   /** q101 gate path — the [[prepareCorpus]] recipe derived from PERSISTED
     * stage artifacts: cleaning survivors ([[ensureCleanSurvivors]]),
@@ -2807,7 +2780,7 @@ object Text {
     // A build REPLACES the store, but settling first still matters: it
     // retires a crashed compaction's `_old` sibling so no stale staging
     // survives beside the fresh store.
-    val norm = settleStoreSwap(spark, dir)
+    val norm = Lifecycle.settleStore(spark, dir)
     docDigests(corpusDocs)
       .select(
         col("doc_id").as("sdoc_id"),
@@ -2828,7 +2801,7 @@ object Text {
     */
   def appendToDigestStore(
       spark: SparkSession, storeDir: String, survivors: DataFrame): Unit = {
-    val dir = settleStoreSwap(spark, storeDir)
+    val dir = Lifecycle.settleStore(spark, storeDir)
     // Refuse a never-built path (the band-store twin refuses via _params):
     // SaveMode.Append would silently create a near-empty store there, and a
     // probe later pointed at it would admit every duplicate.
@@ -2849,22 +2822,12 @@ object Text {
       spark: SparkSession,
       sfDir: String,
       batchMod: Long = 7,
-      batchRem: Long = 0): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:digest-store:$batchMod:$batchRem:v1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-digest-store-$key")
-    // Settle a crashed compaction swap BEFORE the sentinel check: with the
-    // live dir missing, the sentinel is absent and an unsettled rebuild
-    // would recreate a corpus-only store beside `_old` (losing every row
-    // appended since the build when the next compaction clears staging).
-    settleStoreSwap(spark, dir.getAbsolutePath)
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+      batchRem: Long = 0): String =
+    graft.Stores.ensure(spark, "digest-store", s"$sfDir/documents.parquet",
+        s"$batchMod:$batchRem") { dir =>
       buildDigestStore(spark,
-        Tables.documents(spark, sfDir).filter(col("doc_id") % batchMod =!= batchRem),
-        dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        Tables.documents(spark, sfDir).filter(col("doc_id") % batchMod =!= batchRem), dir)
+    }
 
   /** The per-delivery probe at the heart of q107 and the streaming twin:
     * batch doc rows → surviving in-batch canonicals whose content is not in
@@ -2874,7 +2837,7 @@ object Text {
     */
   def dedupBatchAgainstStore(
       spark: SparkSession, batchDocs: DataFrame, storeDir: String): DataFrame = {
-    val dir = settleStoreSwap(spark, storeDir)
+    val dir = Lifecycle.settleStore(spark, storeDir)
     val batchRaw = docDigests(batchDocs)
     val canon = batchRaw
       .groupBy(col("h64"), col("h256"))
@@ -3013,29 +2976,6 @@ object Text {
       col("bh").as("sbh"))
   }
 
-  // marker I/O shared with the cell store — see Lifecycle.writeMarker
-  private def writeMarker(
-      fs: org.apache.hadoop.fs.FileSystem, path: org.apache.hadoop.fs.Path,
-      content: String): Unit = Lifecycle.writeMarker(fs, path, content)
-
-  private def readMarker(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path): String = Lifecycle.readMarker(fs, path)
-
-  /** Settle a crashed [[compactStore]] swap via [[Lifecycle.settleSwap]]
-    * (the shared write-aside/two-rename protocol): when the previous
-    * compaction died between its two renames, the only complete copy of the
-    * store sits in `_old` and the live dir is missing — roll it forward.
-    * EVERY store entry point (build, append, probe, compact) settles first,
-    * so no writer can blindly recreate a missing live dir and trick a later
-    * compaction's recovery into deleting the real store in `_old`. Returns
-    * the slash-normalized store path (a trailing slash would turn the
-    * `_old` / `_compacting` siblings into CHILDREN of the live dir and make
-    * the swap rename a directory into itself).
-    */
-  private def settleStoreSwap(spark: SparkSession, storeDir: String): String =
-    Lifecycle.settleStore(spark, storeDir)
-
   /** Write the band store for a corpus frame and record its signing
     * parameters in a `_params` marker — the parameters are part of the
     * artifact's identity (the [[graft.operators.Index]] model-doc
@@ -3051,12 +2991,12 @@ object Text {
       k: Int = 12,
       rowsPerBand: Int = 4,
       sampleMod: Int = 3): Unit = {
-    val norm = settleStoreSwap(spark, dir) // see buildDigestStore
+    val norm = Lifecycle.settleStore(spark, dir) // see buildDigestStore
     bandStoreRows(corpusDocs, shingleLen, k, rowsPerBand, sampleMod)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(norm)
-    writeMarker(Lifecycle.fsOf(spark, norm),
-      new org.apache.hadoop.fs.Path(s"$norm/_params"),
+    Lifecycle.writeMarker(Lifecycle.fsOf(spark, norm),
+      new org.apache.hadoop.fs.Path(norm, graft.Stores.Sentinel),
       bandParamsTag(shingleLen, k, rowsPerBand, sampleMod))
   }
 
@@ -3075,15 +3015,9 @@ object Text {
       k: Int = 12,
       rowsPerBand: Int = 4,
       sampleMod: Int = 3): Unit = {
-    val dir = settleStoreSwap(spark, storeDir)
-    val fs = Lifecycle.fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_params")
-    require(fs.exists(p), s"band store $dir has no _params marker")
-    val have = readMarker(fs, p)
-    val want = bandParamsTag(shingleLen, k, rowsPerBand, sampleMod)
-    require(have == want,
-      s"band store signed under [$have], append requested [$want] " +
-        "- rows signed under different parameters can never band-collide correctly")
+    val dir = requireStoreParams(spark, storeDir, "band",
+      bandParamsTag(shingleLen, k, rowsPerBand, sampleMod), "append",
+      "rows signed under different parameters can never band-collide correctly")
     bandStoreRows(accepted, shingleLen, k, rowsPerBand, sampleMod)
       .write.mode(org.apache.spark.sql.SaveMode.Append)
       .parquet(dir)
@@ -3098,27 +3032,17 @@ object Text {
     * appends and streaming sinks while compacting — an append landing
     * between the snapshot read and the swap would be staged aside with the
     * old directory and dropped. A crashed swap is settled by the next
-    * store operation ([[settleStoreSwap]] rolls `_old` forward when live
-    * is missing); `_old` is deleted here only as post-promote cleanup,
+    * store operation ([[Lifecycle.settleStore]] rolls `_old` forward when
+    * live is missing); `_old` is deleted here only as post-promote cleanup,
     * which is unambiguous because every writer settles before touching the
-    * store. A band store's `_params` marker is copied into the rewritten
-    * directory before the swap so the compacted store keeps its identity.
+    * store. The swap is [[Lifecycle.rewriteStore]], which carries the
+    * store's sentinel into the rewritten directory.
     */
-  def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = settleStoreSwap(spark, storeDir)
-    val fs = Lifecycle.fsOf(spark, dir)
-    val live = new Path(dir)
-    val old = new Path(s"${dir}_old")
-    val tmp = new Path(s"${dir}_compacting")
-    Lifecycle.clearSwapStaging(fs, old, tmp)
-    val params = new Path(s"$dir/_params")
-    val tag = if (fs.exists(params)) Some(readMarker(fs, params)) else None
-    spark.read.parquet(dir).distinct()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-    tag.foreach(t => writeMarker(fs, new Path(s"$tmp/_params"), t))
-    Lifecycle.promoteSwap(fs, live, old, tmp)
-  }
+  def compactStore(spark: SparkSession, storeDir: String): Unit =
+    Lifecycle.rewriteStore(spark, storeDir) { (dir, tmp) =>
+      spark.read.parquet(dir).distinct()
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+    }
 
   def ensureBandStore(
       spark: SparkSession,
@@ -3128,24 +3052,13 @@ object Text {
       shingleLen: Int = 8,
       k: Int = 12,
       rowsPerBand: Int = 4,
-      sampleMod: Int = 3): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:band-store:$batchMod:$batchRem:" +
-        s"$shingleLen:$k:$rowsPerBand:$sampleMod:v2") // v2: _params marker
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-band-store-$key")
-    // Settle BEFORE the sentinel check (see ensureDigestStore); completion
-    // sentinel is _params — buildBandStore writes it LAST, so a crash
-    // between the parquet commit and the marker leaves no sentinel and the
-    // next ensure call rebuilds instead of caching a store that
-    // permanently refuses appends
-    settleStoreSwap(spark, dir.getAbsolutePath)
-    if (!new java.io.File(dir, "_params").exists())
+      sampleMod: Int = 3): String =
+    graft.Stores.ensure(spark, "band-store", s"$sfDir/documents.parquet",
+        s"$batchMod:$batchRem:$shingleLen:$k:$rowsPerBand:$sampleMod") { dir =>
       buildBandStore(spark,
         Tables.documents(spark, sfDir).filter(col("doc_id") % batchMod =!= batchRem),
-        dir.getAbsolutePath, shingleLen, k, rowsPerBand, sampleMod)
-    dir.getAbsolutePath
-  }
+        dir, shingleLen, k, rowsPerBand, sampleMod)
+    }
 
   /** q109 — INCREMENTAL near-duplicate detection: which documents of an
     * arriving delivery are near-copies of something already ingested? The
@@ -3200,7 +3113,7 @@ object Text {
         .select(col("doc_id"), shingleSet(shingleLen, sampleMod).as("units")))
     val batchTok = batchUnits.select(col("doc_id"), explode(col("units")).as("t"))
     val (bands, sizes) = signatureBands(batchUnits, k, rowsPerBand)
-    val store = graft.Readers.parquet(spark, settleStoreSwap(spark, storeDir))
+    val store = graft.Readers.parquet(spark, Lifecycle.settleStore(spark, storeDir))
     val cands = store.join(
         broadcast(bands),
         col("sband") === col("band") && col("sbh") === col("bh"))
@@ -3346,9 +3259,8 @@ object Text {
     g.select(col("g64").as("sg64"), col("g64b").as("sg64b")).distinct()
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(dir)
-    // written LAST: completion sentinel + identity (band-store discipline)
-    writeMarker(Lifecycle.fsOf(spark, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/_params"),
+    Lifecycle.writeMarker(Lifecycle.fsOf(spark, dir),
+      new org.apache.hadoop.fs.Path(dir, graft.Stores.Sentinel),
       noveltyParamsTag(gram, sampleMod))
   }
 
@@ -3357,7 +3269,7 @@ object Text {
 
   private def requireNoveltyParams(
       spark: SparkSession, dir: String, gram: Int, sampleMod: Int,
-      op: String): Unit =
+      op: String): String =
     requireStoreParams(spark, dir, "novelty gram",
       noveltyParamsTag(gram, sampleMod), op,
       "gram digests of different lengths or sampling can never match correctly")
@@ -3370,13 +3282,13 @@ object Text {
   def appendToNoveltyGramStore(
       spark: SparkSession, storeDir: String, docs: DataFrame,
       gram: Int = 8, sampleMod: Int = 1): Unit = {
-    requireNoveltyParams(spark, storeDir, gram, sampleMod, "append")
+    val dir = requireNoveltyParams(spark, storeDir, gram, sampleMod, "append")
     val g0 = gramDigestsOf(docs, gram)
     val g = if (sampleMod <= 1) g0
       else g0.filter(pmod(col("g64"), lit(sampleMod.toLong)) === 0)
     g.select(col("g64").as("sg64"), col("g64b").as("sg64b")).distinct()
       .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
+      .parquet(dir)
     graft.Readers.bump()
   }
 
@@ -3389,16 +3301,12 @@ object Text {
       gram: Int = 8, batchMod: Long = 7, batchRem: Long = 0,
       sampleMod: Int = AutoSampleMod): String = {
     val resolved = resolveSampleMod(spark, sfDir, sampleMod)
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:noveltystore:$gram:$batchMod:$batchRem:$resolved:p1:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-noveltystore-$key")
-    // _params written LAST = completion sentinel (see ensureLineDictStore)
-    if (!new java.io.File(dir, "_params").exists())
+    graft.Stores.ensure(spark, "noveltystore", s"$sfDir/documents.parquet",
+        s"$gram:$batchMod:$batchRem:$resolved:p1") { dir =>
       buildNoveltyGramStore(spark,
         Tables.documents(spark, sfDir).filter(col("doc_id") % batchMod =!= batchRem),
-        dir.getAbsolutePath, gram, resolved)
-    dir.getAbsolutePath
+        dir, gram, resolved)
+    }
   }
 
   /** The per-delivery probe: a batch gram is SHARED iff another BATCH
@@ -3414,7 +3322,7 @@ object Text {
   def noveltyBatchAgainstStore(
       spark: SparkSession, batchDocs: DataFrame, storeDir: String,
       gram: Int = 8, sampleMod: Int = 1): DataFrame = {
-    requireNoveltyParams(spark, storeDir, gram, sampleMod, "probe")
+    val dir = requireNoveltyParams(spark, storeDir, gram, sampleMod, "probe")
     val g0 = gramDigestsOf(batchDocs, gram)
     // NOT pinned — the spanBatchAgainstStore measurement (+0.14 s/query
     // pinned): delivery-bounded recompute beats a checkpoint here.
@@ -3424,7 +3332,7 @@ object Text {
     val flagged = g
       .withColumn("mn", min(col("doc_id")).over(wg))
       .withColumn("mx", max(col("doc_id")).over(wg))
-    val store = graft.Readers.parquet(spark, storeDir)
+    val store = graft.Readers.parquet(spark, dir)
     val hits = store.join(
       broadcast(g.select(col("g64"), col("g64b"))),
       col("sg64") === col("g64") && col("sg64b") === col("g64b"), "left_semi")
@@ -3498,7 +3406,7 @@ object Text {
     */
   def buildGramStore(
       spark: SparkSession, evalDocs: DataFrame, dir: String, gram: Int = 8): Unit = {
-    val norm = settleStoreSwap(spark, dir) // see buildDigestStore
+    val norm = Lifecycle.settleStore(spark, dir) // see buildDigestStore
     gramDigestsOf(evalDocs, gram)
       .select(
         col("doc_id").as("seval_doc"),
@@ -3506,8 +3414,8 @@ object Text {
         col("g64b").as("sg64b"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(norm)
-    writeMarker(Lifecycle.fsOf(spark, norm),
-      new org.apache.hadoop.fs.Path(s"$norm/_params"), gramParamsTag(gram))
+    Lifecycle.writeMarker(Lifecycle.fsOf(spark, norm),
+      new org.apache.hadoop.fs.Path(norm, graft.Stores.Sentinel), gramParamsTag(gram))
   }
 
   /** Append a newly registered eval suite's grams to the store. At-least-once
@@ -3519,8 +3427,7 @@ object Text {
   def appendToGramStore(
       spark: SparkSession, storeDir: String, evalDocs: DataFrame,
       gram: Int = 8): Unit = {
-    val dir = settleStoreSwap(spark, storeDir)
-    requireGramParams(spark, dir, gram, "append")
+    val dir = requireGramParams(spark, storeDir, gram, "append")
     gramDigestsOf(evalDocs, gram)
       .select(
         col("doc_id").as("seval_doc"),
@@ -3532,27 +3439,30 @@ object Text {
   }
 
   private def requireGramParams(
-      spark: SparkSession, dir: String, gram: Int, op: String): Unit =
+      spark: SparkSession, dir: String, gram: Int, op: String): String =
     requireStoreParams(spark, dir, "gram", gramParamsTag(gram), op,
       "grams of different lengths can never collide correctly")
 
-  /** Shared identity check for every parameterized increment store (band/
-    * gram since r6; span/line-dict/novelty-gram joined in r8): `_params`
-    * is written LAST at build — the completion sentinel — and must match
-    * verbatim on every append AND probe. Rows signed under different
-    * parameters can never collide correctly, so drift is refused by name
-    * instead of silently poisoning membership semantics.
+  /** Shared entry check for every parameterized increment store (band,
+    * gram, span, line-dict, novelty-gram): settle a crashed swap first
+    * (every store entry point does), then require the signing tag — the
+    * build writes it as the [[graft.Stores.Sentinel]] — to match verbatim
+    * on every append AND probe. Rows signed under different parameters can
+    * never collide correctly, so drift is refused by name instead of
+    * silently poisoning membership semantics. Returns the settled dir.
     */
   private def requireStoreParams(
-      spark: SparkSession, dir: String, family: String, want: String,
-      op: String, why: String): Unit = {
+      spark: SparkSession, storeDir: String, family: String, want: String,
+      op: String, why: String): String = {
+    val dir = Lifecycle.settleStore(spark, storeDir)
     val fs = Lifecycle.fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_params")
+    val p = new org.apache.hadoop.fs.Path(dir, graft.Stores.Sentinel)
     require(fs.exists(p),
       s"$family store $dir has no _params marker - build it first")
-    val have = readMarker(fs, p)
+    val have = Lifecycle.readMarker(fs, p)
     require(have == want,
       s"$family store signed under [$have], $op requested [$want] - $why")
+    dir
   }
 
   def ensureGramStore(
@@ -3560,20 +3470,13 @@ object Text {
       sfDir: String,
       gram: Int = 8,
       evalMod: Long = 19,
-      evalRem: Long = 3): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:gram-store:$gram:$evalMod:$evalRem:v1")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-gram-store-$key")
-    // settle BEFORE the sentinel check; _params is written LAST and is the
-    // completion sentinel (see ensureBandStore)
-    settleStoreSwap(spark, dir.getAbsolutePath)
-    if (!new java.io.File(dir, "_params").exists())
+      evalRem: Long = 3): String =
+    graft.Stores.ensure(spark, "gram-store", s"$sfDir/documents.parquet",
+        s"$gram:$evalMod:$evalRem") { dir =>
       buildGramStore(spark,
         Tables.documents(spark, sfDir).filter(col("doc_id") % evalMod === evalRem),
-        dir.getAbsolutePath, gram)
-    dir.getAbsolutePath
-  }
+        dir, gram)
+    }
 
   /** The per-delivery probe of q113: arriving train docs → per-doc
     * contamination counts against the persisted eval-gram store. The store
@@ -3586,8 +3489,7 @@ object Text {
   def decontaminateBatchAgainstStore(
       spark: SparkSession, batchDocs: DataFrame, storeDir: String,
       gram: Int = 8): DataFrame = {
-    val dir = settleStoreSwap(spark, storeDir)
-    requireGramParams(spark, dir, gram, "probe")
+    val dir = requireGramParams(spark, storeDir, gram, "probe")
     // distinct BEFORE the broadcast: replayed appends legally duplicate
     // store rows; without the dedup the broadcast scales with the copies
     val store = graft.Readers.parquet(spark, dir)
@@ -3856,16 +3758,13 @@ object Text {
     // explicit-vs-auto aliasing too: auto resolving to 1 and explicit 1
     // share one artifact, as they should).
     val resolved = resolveSampleMod(spark, sfDir, sampleMod)
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:spanhits:$spanLen:$resolved:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-spanhits-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists())
+    graft.Stores.ensure(spark, "spanhits", s"$sfDir/documents.parquet",
+        s"$spanLen:$resolved") { dir =>
       duplicatedSpanHits(spark, sfDir, spanLen, resolved)
         .select(col("doc_id"), col("pos"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
-    dir.getAbsolutePath
+        .parquet(dir)
+    }
   }
 
   /** q174 — the cut list served from the PREBUILT hit artifact (see
@@ -3957,9 +3856,8 @@ object Text {
       .distinct()
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(dir)
-    // written LAST: completion sentinel + identity (band-store discipline)
-    writeMarker(Lifecycle.fsOf(spark, dir),
-      new org.apache.hadoop.fs.Path(s"$dir/_params"),
+    Lifecycle.writeMarker(Lifecycle.fsOf(spark, dir),
+      new org.apache.hadoop.fs.Path(dir, graft.Stores.Sentinel),
       spanParamsTag(spanLen, sampleMod))
   }
 
@@ -3968,7 +3866,7 @@ object Text {
 
   private def requireSpanParams(
       spark: SparkSession, dir: String, spanLen: Int, sampleMod: Int,
-      op: String): Unit =
+      op: String): String =
     requireStoreParams(spark, dir, "span", spanParamsTag(spanLen, sampleMod),
       op, "window digests of different lengths or sampling can never match correctly")
 
@@ -3982,12 +3880,12 @@ object Text {
   def appendToSpanStore(
       spark: SparkSession, storeDir: String, docs: DataFrame,
       spanLen: Int = 40, sampleMod: Int = 1): Unit = {
-    requireSpanParams(spark, storeDir, spanLen, sampleMod, "append")
+    val dir = requireSpanParams(spark, storeDir, spanLen, sampleMod, "append")
     spanWindowsOf(docs, spanLen, sampleMod)
       .select(col("h1").as("sh1"), col("h2").as("sh2"))
       .distinct()
       .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(storeDir)
+      .parquet(dir)
     graft.Readers.bump()
   }
 
@@ -4001,16 +3899,12 @@ object Text {
       spanLen: Int = 40, batchMod: Long = 7, batchRem: Long = 0,
       sampleMod: Int = AutoSampleMod): String = {
     val resolved = resolveSampleMod(spark, sfDir, sampleMod)
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/documents.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:spanstore:$spanLen:$batchMod:$batchRem:$resolved:p1:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-spanstore-$key")
-    // _params written LAST = completion sentinel (see ensureLineDictStore)
-    if (!new java.io.File(dir, "_params").exists())
+    graft.Stores.ensure(spark, "spanstore", s"$sfDir/documents.parquet",
+        s"$spanLen:$batchMod:$batchRem:$resolved:p1") { dir =>
       buildSpanStore(spark,
         Tables.documents(spark, sfDir).filter(col("doc_id") % batchMod =!= batchRem),
-        dir.getAbsolutePath, spanLen, resolved)
-    dir.getAbsolutePath
+        dir, spanLen, resolved)
+    }
   }
 
   /** The per-delivery probe: the q114 summary for an ARRIVING batch
@@ -4029,7 +3923,7 @@ object Text {
   def spanBatchAgainstStore(
       spark: SparkSession, batchDocs: DataFrame, storeDir: String,
       spanLen: Int = 40, sampleMod: Int = 1): DataFrame = {
-    requireSpanParams(spark, storeDir, spanLen, sampleMod, "probe")
+    val dir = requireSpanParams(spark, storeDir, spanLen, sampleMod, "probe")
     // NOT pinned (r14, measured): the delivery digests feed two consumers
     // (ownership window + store-probe broadcast) and column pruning makes
     // the kernel run once per consumer — but an eager digest pin was
@@ -4043,7 +3937,7 @@ object Text {
     val flagged = win
       .withColumn("mn", min(col("doc_id")).over(wdig))
       .withColumn("mx", max(col("doc_id")).over(wdig))
-    val store = graft.Readers.parquet(spark, storeDir)
+    val store = graft.Readers.parquet(spark, dir)
     val hits = store.join(
       broadcast(win.select(col("h1"), col("h2"))),
       col("sh1") === col("h1") && col("sh2") === col("h2"), "left_semi")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -341,18 +342,13 @@ object Vectors {
     }
 
   /** Build-once cache in the JVM temp dir, keyed like [[Index.ensure]]. */
-  def ensureIvfIndex(spark: SparkSession, sfDir: String, cells: Int = 16): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:ivf:$cells:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-ivf-index-$key")
-    if (!new java.io.File(dir, "cells/_SUCCESS").exists())
+  def ensureIvfIndex(spark: SparkSession, sfDir: String, cells: Int = 16): String =
+    graft.Stores.ensure(spark, "ivf-index", s"$sfDir/embeddings.parquet", s"$cells") { dir =>
       // share the fitted-quantizer artifact with the inline path (annIvf):
       // one fit per (corpus, cells) serves both, and results stay identical
       buildIvfIndexWith(spark, Tables.embeddings(spark, sfDir),
-        kmeansModel(spark, sfDir, k = cells, iterations = 1), dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        kmeansModel(spark, sfDir, k = cells, iterations = 1), dir)
+    }
 
   /** q29 — IVF ANN against the PERSISTED cell-partitioned index: the coarse
     * quantizer is loaded (and memoizable) driver-side, each query's nprobe
@@ -581,15 +577,12 @@ object Vectors {
       bits: Int = 0): String = {
     val n = Tables.embeddingsCount(spark, sfDir)
     val useBits = if (bits > 0) bits else Lsh.deriveBits(n, Lsh.PairTargetBucket)
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
     val files = math.min(8, spark.sparkContext.defaultParallelism)
     // :bcap — the build-time bucket cap is part of the artifact's identity
     // (an uncapped above-ceiling artifact from an older build must never
     // serve a reader that assumes pre-capped rows)
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:pairposts:agg:bcap2:p$files:$tables:$useBits:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-pairposts-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+    graft.Stores.ensure(spark, "pairposts", s"$sfDir/embeddings.parquet",
+        s"agg:bcap2:p$files:$tables:$useBits") { dir =>
       val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
       val model = pairModel(spark, sfDir, tables, useBits)
       // BUCKET-AGGREGATED layout: one row per (tbl, hash) holding the
@@ -633,9 +626,8 @@ object Vectors {
         // (tbl, hash)-sorted files carry min/max stats for free.
         .repartitionByRange(files, col("tbl"), col("hash"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
+        .parquet(dir)
     }
-    dir.getAbsolutePath
   }
 
   /** q63 gate path — pair mining over the PERSISTED bucket-aggregated
@@ -1090,19 +1082,17 @@ object Vectors {
     val canon = emb.queryExecution.analyzed.canonicalized
     val key = Index.cacheKey(
       s"${canon.treeString}:${canon.semanticHash()}:$cells:$iterations:v${Index.LayoutVersion}")
-    // onceExclusive: the miss path writes the fit dir — two racing fits
-    // would race two Overwrite jobs on one path.
+    // onceExclusive: one fit per key per JVM. The dir is unique to this JVM
+    // (a session-scoped fit never outlives it), so there is no earlier
+    // build to find and no sentinel to check.
     val dir = graft.Memo.onceExclusive(quantizerTableMemo, key) {
-      val d = new java.io.File(sys.props("java.io.tmpdir"), s"graft-quantizerT-$key")
-      quantizerTmpReaper.add(d.getAbsolutePath)
-      if (!new java.io.File(d, "_SUCCESS").exists()) {
-        val fitted =
-          refineCentroidsTable(spark, emb, seedCentroidsTable(emb, cells), iterations)
-        fitted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(d.getAbsolutePath)
-        Materialize.release(fitted)
-      }
-      d.getAbsolutePath
+      val d = java.nio.file.Files.createTempDirectory(s"graft-quantizerT-$key-").toString
+      quantizerTmpReaper.add(d)
+      val fitted =
+        refineCentroidsTable(spark, emb, seedCentroidsTable(emb, cells), iterations)
+      fitted.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(d)
+      Materialize.release(fitted)
+      d
     }
     graft.Readers.parquet(spark, dir)
   }
@@ -1118,21 +1108,17 @@ object Vectors {
       sfDir: String,
       k: Int = 0,
       iterations: Int = 3): DataFrame = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
     val kKey = if (k > 0) k.toString else "autoU"
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:kmeansT:$kKey:$iterations:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-kmeansT-$key")
-    if (!new java.io.File(dir, "_SUCCESS").exists()) {
+    graft.Readers.parquet(spark, graft.Stores.ensure(spark, "kmeansT",
+        s"$sfDir/embeddings.parquet", s"$kKey:$iterations") { dir =>
       val emb = Tables.embeddings(spark, sfDir)
       val kk = if (k > 0) k else deriveKUnbounded(emb.count())
-      // quantizerTable returns an unpinned read of a per-call tmp fit;
-      // copying it into the keyed artifact dir is a k-row file copy.
-      quantizerTable(spark, emb, kk, iterations)
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(dir.getAbsolutePath)
-    }
-    graft.Readers.parquet(spark, dir.getAbsolutePath)
+      // the fit lands in the keyed store directly; releasing the iteration
+      // pin after the write leaves the returned plan a plain scan
+      val fitted = refineCentroidsTable(spark, emb, seedCentroidsTable(emb, kk), iterations)
+      fitted.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
+      Materialize.release(fitted)
+    })
   }
 
   /** AUTO-k cell assignment with [[KCeiling]] routing — the single entry
@@ -1171,17 +1157,13 @@ object Vectors {
     // Key by "auto", not the derived value — the Index.ensure discipline:
     // the memoized path never pays the deriveK count() job.
     val kKey = if (k > 0) k.toString else "auto"
-    // onceExclusive, not once: the miss path WRITES the persisted artifact
-    // dir — a double load would race two Overwrite jobs on one path.
-    graft.Memo.onceExclusive(kmeansCache, s"$sfDir:$srcSig:$kKey:$iterations") {
-      // persisted model artifact (the Lsh.saveModel discipline: fit once,
-      // any session/engine reads it back) + per-JVM memo on top; the "auto"
-      // key spares even a fresh JVM the deriveK count when the artifact exists
-      val key = Index.cacheKey(s"$sfDir:$srcSig:kmeans:$kKey:$iterations:v${Index.LayoutVersion}")
-      val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-kmeans-$key")
-      if (new java.io.File(dir, "_SUCCESS").exists())
-        loadCentroids(spark, dir.getAbsolutePath)
-      else {
+    // persisted model artifact (the Lsh.saveModel discipline: fit once,
+    // any session/engine reads it back) + per-JVM memo on top; the "auto"
+    // key spares even a fresh JVM the deriveK count when the artifact
+    // exists. A miss race loads twice; the store lock builds once.
+    graft.Memo.once(kmeansCache, s"$sfDir:$srcSig:$kKey:$iterations") {
+      loadCentroids(spark, graft.Stores.ensure(spark, "kmeans",
+          s"$sfDir/embeddings.parquet", s"$kKey:$iterations") { dir =>
         val emb = Tables.embeddings(spark, sfDir)
         val kk = if (k > 0) k else deriveK(emb)
         val cents = quantizer(spark, emb, kk, iterations)
@@ -1189,9 +1171,8 @@ object Vectors {
         cents.ids.zip(cents.vecs.map(_.toSeq)).toSeq
           .toDF("cell", "centroid")
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(dir.getAbsolutePath)
-        cents
-      }
+          .parquet(dir)
+      })
     }
   }
 
@@ -1373,12 +1354,17 @@ object Vectors {
   // store / q107, textual: band store / q109).
   // ------------------------------------------------------------------
 
-  /** Settle a crashed [[compactCellStore]] swap via the shared
-    * [[Lifecycle.settleStore]] — see that scaladoc for the protocol and
-    * the slash-normalization rationale.
+  /** Settle, then refuse a never-built or half-built store (no sentinel):
+    * appending to one would silently create a store with no centroids.
+    * Returns the normalized dir.
     */
-  private def settleCellStore(spark: SparkSession, storeDir: String): String =
-    Lifecycle.settleStore(spark, storeDir)
+  private def requireCellStore(spark: SparkSession, storeDir: String): String = {
+    val dir = Lifecycle.settleStore(spark, storeDir)
+    require(Lifecycle.fsOf(spark, dir).exists(new Path(dir, graft.Stores.Sentinel)),
+      s"cell store $dir does not exist or is incomplete - build it first " +
+        "(buildCellStore / ensureCellStore)")
+    dir
+  }
 
   private def cellStoreRows(emb: DataFrame, cents: CentroidSet): DataFrame =
     assignCellsWith(emb, cents).select(
@@ -1394,10 +1380,9 @@ object Vectors {
     * few cells prunes partitions. Centroid identity travels with the store:
     * [[appendToCellStore]] assigns with the store's OWN centroids, so no
     * caller-supplied parameter can drift (unlike the band store's signing
-    * params) and `_params` is a completion sentinel + provenance record
-    * only. Write order matters: data (root Overwrite wipes the dir) →
-    * centroids → `_params` LAST, so a crash mid-build leaves no sentinel
-    * and [[ensureCellStore]] rebuilds.
+    * params) and `_params` is a provenance record only. Write order
+    * matters: data (root Overwrite wipes the dir) → centroids → `_params`
+    * LAST, the [[graft.Stores.Sentinel]].
     */
   def buildCellStore(
       spark: SparkSession,
@@ -1405,8 +1390,7 @@ object Vectors {
       dir: String,
       k: Int = 0,
       iterations: Int = 3): Unit = {
-    import org.apache.hadoop.fs.Path
-    val norm = settleCellStore(spark, dir)
+    val norm = Lifecycle.settleStore(spark, dir)
     // KCeiling routing for the ingest-time fit: past the ceiling the model
     // trains distributed and `_centroids/` is written straight from the
     // table — the store layout is identical either way (probes and appends
@@ -1435,7 +1419,7 @@ object Vectors {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$norm/_centroids")
     Lifecycle.writeMarker(Lifecycle.fsOf(spark, norm),
-      new Path(s"$norm/_params"), s"k=$kk,iterations=$iterations")
+      new Path(norm, graft.Stores.Sentinel), s"k=$kk,iterations=$iterations")
     // An in-place REBUILD replaces _centroids; without a bump the artifact
     // memo would keep serving the previous model's CentroidSet against the
     // new store's cell ids.
@@ -1451,12 +1435,7 @@ object Vectors {
     */
   def appendToCellStore(
       spark: SparkSession, storeDir: String, accepted: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = settleCellStore(spark, storeDir)
-    val fs = Lifecycle.fsOf(spark, dir)
-    require(fs.exists(new Path(s"$dir/_params")),
-      s"cell store $dir does not exist or is incomplete - build it first " +
-        "(buildCellStore / ensureCellStore)")
+    val dir = requireCellStore(spark, storeDir)
     val cents = loadCentroids(spark, s"$dir/_centroids")
     cellStoreRows(accepted, cents)
       .write.partitionBy("scell")
@@ -1464,57 +1443,39 @@ object Vectors {
     graft.Readers.bump()
   }
 
-  /** Compact the cell store: distinct-rewrite via the shared write-aside /
-    * two-rename protocol ([[Lifecycle.promoteSwap]]), re-clustered one file
-    * per cell partition — Text.compactStore's partitioned twin, under the
-    * same single-writer maintenance contract. The store's identity (the
-    * `_centroids` model and the `_params` sentinel) is copied into the
-    * rewrite before the swap.
+  /** Compact the cell store: distinct-rewrite via the shared store swap
+    * ([[Lifecycle.rewriteStore]]), re-clustered one file per cell
+    * partition — Text.compactStore's partitioned twin, under the same
+    * single-writer maintenance contract. The `_centroids` model is copied
+    * into the rewrite before the swap.
     */
   def compactCellStore(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val dir = settleCellStore(spark, storeDir)
-    val fs = Lifecycle.fsOf(spark, dir)
-    require(fs.exists(new Path(s"$dir/_params")),
-      s"cell store $dir does not exist or is incomplete - build it first " +
-        "(buildCellStore / ensureCellStore)")
-    val live = new Path(dir)
-    val old = new Path(s"${dir}_old")
-    val tmp = new Path(s"${dir}_compacting")
-    Lifecycle.clearSwapStaging(fs, old, tmp)
-    spark.read.parquet(dir).distinct()
-      .repartition(col("scell"))
-      .write.partitionBy("scell")
-      .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp.toString)
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, new Path(s"$dir/_centroids"), fs, new Path(s"$tmp/_centroids"),
-      false, spark.sparkContext.hadoopConfiguration)
-    Lifecycle.writeMarker(fs, new Path(s"$tmp/_params"),
-      Lifecycle.readMarker(fs, new Path(s"$dir/_params")))
-    Lifecycle.promoteSwap(fs, live, old, tmp)
+    requireCellStore(spark, storeDir)
+    Lifecycle.rewriteStore(spark, storeDir) { (dir, tmp) =>
+      spark.read.parquet(dir).distinct()
+        .repartition(col("scell"))
+        .write.partitionBy("scell")
+        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+      val fs = Lifecycle.fsOf(spark, dir)
+      org.apache.hadoop.fs.FileUtil.copy(
+        fs, new Path(s"$dir/_centroids"), fs, new Path(s"$tmp/_centroids"),
+        false, spark.sparkContext.hadoopConfiguration)
+    }
   }
 
   /** Build-once cache of the gate cell store (corpus minus the arriving
-    * batch split), keyed like [[Index.ensure]]. Settles a crashed
-    * compaction swap BEFORE the sentinel check — see Text.ensureDigestStore
-    * for why an unsettled rebuild would lose appended rows.
+    * batch split), via [[graft.Stores.ensure]].
     */
   def ensureCellStore(
       spark: SparkSession,
       sfDir: String,
       batchMod: Long = 7,
-      batchRem: Long = 0): String = {
-    val srcSig = graft.Tables.fixtureSig(spark, s"$sfDir/embeddings.parquet")
-    val key = Index.cacheKey(
-      s"$sfDir:$srcSig:cell-store:$batchMod:$batchRem:v${Index.LayoutVersion}")
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), s"graft-cell-store-$key")
-    settleCellStore(spark, dir.getAbsolutePath)
-    if (!new java.io.File(dir, "_params").exists())
+      batchRem: Long = 0): String =
+    graft.Stores.ensure(spark, "cell-store", s"$sfDir/embeddings.parquet",
+        s"$batchMod:$batchRem") { dir =>
       buildCellStore(spark,
-        Tables.embeddings(spark, sfDir).filter(col("vec_id") % batchMod =!= batchRem),
-        dir.getAbsolutePath)
-    dir.getAbsolutePath
-  }
+        Tables.embeddings(spark, sfDir).filter(col("vec_id") % batchMod =!= batchRem), dir)
+    }
 
   /** The per-delivery semantic probe: which arriving embeddings are
     * cosine-similar (≥ threshold) to an already-ingested vector? SemDeDup's
@@ -1535,7 +1496,7 @@ object Vectors {
       batchEmb: DataFrame,
       storeDir: String,
       threshold: Double): DataFrame = {
-    val dir = settleCellStore(spark, storeDir)
+    val dir = Lifecycle.settleStore(spark, storeDir)
     val cents = loadCentroids(spark, s"$dir/_centroids")
     // pinned: the assignment has two consumers (the cells collect and the
     // broadcast build) and must not run the k×dim argmin twice per delivery

@@ -12,7 +12,7 @@ import graft.{operators => ops}
   * captures the plan of EVERY Spark action each ensure*-fit-build
   * pipeline executes (a QueryExecutionListener around a COLD rebuild —
   * the artifact dir is deleted first so the real build runs, not the
-  * `_SUCCESS` fast path) and runs the identical sweeps with
+  * `Stores.ensure` sentinel fast path) and runs the identical sweeps with
   * builder-surface whitelists, each entry naming its per-group bound.
   *
   * The registry mirrors Bench.scala's untimed-ingest block (the priced
@@ -35,36 +35,12 @@ class BuilderPlanLintSpec extends SparkSpec {
 
   private def capture(body: => Any): Seq[String] = PlanLints.capture(spark)(body)
 
-  /** The persisted-store builders: call once to LOCATE the artifact,
-    * delete it, rebuild cold under the listener. Same default
-    * parameterizations as Bench's ingest block — the lint covers the
-    * production builders, not lint-special twins.
+  /** The persisted-store builders ([[StoreRegistry]]): call once to
+    * LOCATE the artifact, delete it, rebuild cold under the listener. Same
+    * default parameterizations as Bench's ingest block — the lint covers
+    * the production builders, not lint-special twins.
     */
-  private val storeBuilders: Seq[(String, () => String)] = Seq(
-    "lsh_index" -> (() => ops.Index.ensure(spark, sf0001)),
-    "ivf_index" -> (() => ops.Vectors.ensureIvfIndex(spark, sf0001)),
-    "pq_index" -> (() => ops.Pq.ensurePqIndex(spark, sf0001)),
-    "sq_index" -> (() => ops.Pq.ensureSqIndex(spark, sf0001)),
-    "ivfpq_index" -> (() => ops.Pq.ensureIvfPqIndex(spark, sf0001)),
-    "bq_index" -> (() => ops.Pq.ensureBqIndex(spark, sf0001)),
-    "shingle_pairs" -> (() => ops.Text.ensureShinglePairs(spark, sf0001)),
-    "pair_postings" -> (() => ops.Vectors.ensurePairPostings(spark, sf0001)),
-    "phash_store" -> (() => ops.Media.ensurePhashStore(spark, sf0001)),
-    "clean_survivors" -> (() => ops.Text.ensureCleanSurvivors(spark, sf0001)),
-    "contaminated_ids" -> (() => ops.Text.ensureContaminatedIds(spark, sf0001)),
-    "line_removals" -> (() => ops.Text.ensureLineRemovals(spark, sf0001)),
-    "span_hits" -> (() => ops.Text.ensureSpanHits(spark, sf0001)),
-    "span_store" -> (() => ops.Text.ensureSpanStore(spark, sf0001)),
-    "line_dict_store" -> (() => ops.Text.ensureLineDictStore(spark, sf0001)),
-    "novelty_gram_store" -> (() => ops.Text.ensureNoveltyGramStore(spark, sf0001)),
-    "vocab_store" -> (() => ops.Retrieval.ensureVocabStore(spark, sf0001)),
-    "postings_store" -> (() => ops.Retrieval.ensurePostingsStore(spark, sf0001)),
-    "norms_store" -> (() => ops.Retrieval.ensureNormsStore(spark, sf0001)),
-    "digest_store" -> (() => ops.Text.ensureDigestStore(spark, sf0001)),
-    "band_store" -> (() => ops.Text.ensureBandStore(spark, sf0001)),
-    "cell_store" -> (() => ops.Vectors.ensureCellStore(spark, sf0001)),
-    "gram_store" -> (() => ops.Text.ensureGramStore(spark, sf0001)),
-    "label_store" -> (() => ops.Components.ensureLabelStore(spark, sf0001)))
+  private def storeBuilders: Seq[(String, () => String)] = StoreRegistry.entries(spark, sf0001)
 
   /** The fit/assignment kernels, run RAW (no artifact cache, no in-JVM
     * memo) so the capture always sees the real pipelines — including the
@@ -142,6 +118,9 @@ class BuilderPlanLintSpec extends SparkSpec {
     "kmeans_fit_table" -> ("assignCellsHierarchical step 3: collect_list of " +
       "coarseK 16-byte (d2, ccell) structs per vector — coarseK-bounded by " +
       "the operator's own require(coarseK <= 65536), carries no embedding"),
+    "kmeans_table" -> ("table-path Lloyd (refineCentroidsTable): CentroidAgg " +
+      "keeps one dim-length Long sum array plus a count per CELL — bounded " +
+      "by the embedding dimension, never by cell population"),
     "pair_postings" -> ("bucket posting lists: collect_list(vec_id) per " +
       "(tbl, hash) AFTER Skew.capBuckets pre-caps the bucket (the build " +
       "applies the same cap as the mining tail, scaladoc'd at " +
@@ -186,8 +165,9 @@ class BuilderPlanLintSpec extends SparkSpec {
     // assignCellsWithTable valve). The DRIVER-path fits (ivf/cell/pq
     // stores at fixture scale, kmeans_fit_driver) assign via a codegen
     // expression over a broadcast ARRAY, not a join — no BNLJ, which is
-    // why they are absent here.
-    "kmeans_fit_table")
+    // why they are absent here. kmeans_table is the same table-path Lloyd
+    // fit, persisted by kmeansModelTable.
+    "kmeans_fit_table", "kmeans_table")
 
   test("builder BroadcastNestedLoopJoins stay locked to the audited set") {
     val actual = builderPlans.collect {

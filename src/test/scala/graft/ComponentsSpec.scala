@@ -209,6 +209,28 @@ class ComponentsSpec extends SparkSpec {
         s"diff=${(got.toSet diff full.toSet).take(5)} / ${(full.toSet diff got.toSet).take(5)}")
   }
 
+  test("a commit carries the store sentinel: the next ensure serves the committed rows") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    // non-default params: a private store this test may mutate, then delete
+    val ensure = () => Components.ensureLabelStore(spark, sf0001, maxDocId = 60)
+    val dir = ensure()
+    try {
+      val before = spark.read.parquet(dir).count()
+      Components.commitIncrement(spark, dir,
+        Seq((1000000L, 1000000L)).toDF("doc_id", "cluster_id"),
+        Seq.empty[(Long, Long)].toDF("old_label", "new_label"))
+      assert(ensure() == dir)
+      val after = spark.read.parquet(dir)
+      assert(after.count() == before + 1, "ensure rebuilt over the committed increment")
+      assert(after.filter(col("sdoc_id") === 1000000L).count() == 1)
+    } finally Seq(dir, dir + "_old", dir + "_compacting").foreach { d =>
+      val f = new java.io.File(d)
+      if (f.exists()) java.nio.file.Files.walk(f.toPath)
+        .sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.delete(p))
+    }
+  }
+
   test("transitivity: clusters merge through shared members; canonicals are minima") {
     val rows = Components.dedupClusters(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))

@@ -613,9 +613,7 @@ class TextSpec extends SparkSpec {
     // beside _old. A _canary marker distinguishes roll-forward (canary
     // survives) from rebuild (canary gone); underscore files are invisible
     // to parquet reads.
-    for ((ensure, sentinel) <- Seq(
-        (() => Text.ensureBandStore(spark, sf0001), "_params"),
-        (() => Text.ensureDigestStore(spark, sf0001), "_SUCCESS"))) {
+    for ((name, ensure) <- StoreRegistry.entries(spark, sf0001)) {
       val dir = ensure()
       val fs = graft.operators.Lifecycle.fsOf(spark, dir)
       val canary = new org.apache.hadoop.fs.Path(s"$dir/_canary")
@@ -626,10 +624,34 @@ class TextSpec extends SparkSpec {
       val again = ensure()
       assert(again == dir)
       assert(fs.exists(canary),
-        s"ensure rebuilt over a crashed swap instead of settling it ($sentinel store)")
+        s"ensure rebuilt over a crashed swap instead of settling it ($name)")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "_old")) ||
         fs.exists(new org.apache.hadoop.fs.Path(dir)))
       fs.delete(canary, false)
+    }
+    // The append and probe entry points settle too: with the live dir in
+    // _old, an append that recreated it would leave the real store to be
+    // deleted by the next compaction's staging cleanup. batchRem = 1 keys
+    // stores private to this test, which it mutates and then drops.
+    val docs = Tables.documents(spark, sf0001).limit(3)
+    for ((name, ensure, use) <- Seq[(String, () => String, String => Unit)](
+        ("span", () => Text.ensureSpanStore(spark, sf0001, batchRem = 1, sampleMod = 1),
+          d => Text.appendToSpanStore(spark, d, docs)),
+        ("linedict", () => Text.ensureLineDictStore(spark, sf0001, batchRem = 1),
+          d => Text.appendToLineDictStore(spark, d, docs)),
+        ("novelty", () => Text.ensureNoveltyGramStore(spark, sf0001, batchRem = 1, sampleMod = 1),
+          d => { Text.noveltyBatchAgainstStore(spark, docs, d).count(); () }))) {
+      val dir = ensure()
+      val fs = graft.operators.Lifecycle.fsOf(spark, dir)
+      val canary = new org.apache.hadoop.fs.Path(s"$dir/_canary")
+      fs.create(canary, true).close()
+      require(fs.rename(
+        new org.apache.hadoop.fs.Path(dir),
+        new org.apache.hadoop.fs.Path(dir + "_old")))
+      use(dir)
+      assert(fs.exists(canary), s"$name entry point did not settle the crashed swap")
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+      fs.delete(new org.apache.hadoop.fs.Path(dir + "_old"), true)
     }
   }
 
@@ -1182,25 +1204,25 @@ class TextSpec extends SparkSpec {
   }
 
   test("ensure-store crash sentinel: a missing _params marker forces a rebuild, not a poisoned cache") {
-    // _params is written LAST at build: a crash between the parquet commit
+    // _params is written LAST at build: a crash between the data commit
     // and the marker must leave a dir the next ensure* call REBUILDS —
-    // caching it would serve a store that refuses every append/probe.
-    Seq[(String, () => String)](
-      ("span", () => Text.ensureSpanStore(spark, sf0001)),
-      ("linedict", () => Text.ensureLineDictStore(spark, sf0001)),
-      ("novelty", () => Text.ensureNoveltyGramStore(spark, sf0001)))
+    // caching it would serve a half-built store (or, for a signed store,
+    // one that refuses every append/probe). Rows are counted over every
+    // parquet file under the store, so multi-part layouts count too.
+    def rows(dir: String): Long =
+      spark.read.option("recursiveFileLookup", "true").parquet(dir).count()
+    StoreRegistry.entries(spark, sf0001)
       .foreach { case (name, ensure) =>
         val dir = ensure()
         val marker = new java.io.File(dir, "_params")
         assert(marker.exists(), s"$name: _params must be the completion sentinel")
-        val rows = spark.read.parquet(dir).count()
+        val before = rows(dir)
         assert(marker.delete(), s"$name: could not simulate the crash")
         val dir2 = ensure()
         assert(dir2 == dir, s"$name: rebuild must land in the keyed cache dir")
         assert(new java.io.File(dir, "_params").exists(),
           s"$name: rebuild must restore the sentinel")
-        assert(spark.read.parquet(dir).count() == rows,
-          s"$name: rebuilt store drifted from the original")
+        assert(rows(dir) == before, s"$name: rebuilt store drifted from the original")
       }
   }
 
